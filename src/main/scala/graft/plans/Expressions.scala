@@ -752,9 +752,12 @@ case class NearestCentroid(child: Expression, flat: Array[Double],
       c == child && kk == k && dm == dim && java.util.Arrays.equals(f, flat)
     case _ => false
   }
+  // Catalyst hashes expressions often (canonicalization, equivalence
+  // maps); hash the codebook once per instance, not once per call
+  @transient private lazy val flatHash = java.util.Arrays.hashCode(flat)
   override def hashCode(): Int =
     java.util.Objects.hash(child, Integer.valueOf(k), Integer.valueOf(dim),
-      Integer.valueOf(java.util.Arrays.hashCode(flat)))
+      Integer.valueOf(flatHash))
 
   /** Called from generated code. Fields are copied to LOCALS before the
     * loops — a field accessor inside the innermost distance loop blocks
@@ -839,9 +842,10 @@ case class PqEncodeCodes(child: Expression, flat: Array[Double],
         java.util.Arrays.equals(f, flat)
     case _ => false
   }
+  @transient private lazy val flatHash = java.util.Arrays.hashCode(flat) // see NearestCentroid
   override def hashCode(): Int =
     java.util.Objects.hash(child, Integer.valueOf(m), Integer.valueOf(ksub),
-      Integer.valueOf(dsub), Integer.valueOf(java.util.Arrays.hashCode(flat)))
+      Integer.valueOf(dsub), Integer.valueOf(flatHash))
 
   /** Called from generated code. Fields copied to locals before the
     * loops — see [[NearestCentroid.compute]] for why. */

@@ -43,6 +43,16 @@ import org.apache.spark.sql.streaming.Trigger
   * here it is an in-memory frame re-persisted per batch, bounded by the
   * live-auction count). Result equality with the batch plans is pinned
   * in NexmarkStreamingSpec — the batch-only divergence list is empty.
+  *
+  * Micro-batch cost is mostly fixed per trigger, not per row (the
+  * Structured Streaming paper's price of micro-batch execution): at 1,000
+  * rows per batch, `addBatch` dominated and a quarter of it was Janino
+  * compiling expression classes that no cache reuses across queries, or
+  * that a new watermark literal made new. `run` therefore evaluates
+  * expressions interpreted when a micro-batch holds at most
+  * [[InterpretedMaxBatchRows]] rows and keeps generated code above that,
+  * where per-row evaluation outweighs compilation; [[withRunConf]] holds
+  * the rule and every other session setting `run` makes.
   */
 object NexmarkStreaming {
 
@@ -193,95 +203,118 @@ object NexmarkStreaming {
     }
   }
 
-  /** Run one query to completion under Trigger.AvailableNow; returns
-    * events/sec, or None if this query isn't streaming-expressible or the
-    * engine rejects the plan. */
-  def run(spark: SparkSession, name: String, n: Long,
-      rowsPerBatch: Long = 0L, timeoutMs: Long = 300000L): Option[Double] = {
-    // Two data micro-batches by default (plus the watermark-flush no-data
-    // batch below): per-batch incremental planning is the dominant fixed
-    // cost at bench scale, and a 50k-row batch matches what a healthy
-    // micro-batch pipeline carries at this event rate. Latency-sensitive
-    // deployments would size this down; the knob is exactly Spark's
-    // maxOffsetsPerTrigger-style admission control.
-    val batchRows = if (rowsPerBatch > 0) rowsPerBatch else math.max(1L, n / 2)
-    val ckpt = Files.createTempDirectory(s"graft-nexmark-stream-$name").toString
-    // Stateful micro-batch cost is dominated by per-batch state-store
-    // commits: one store per shuffle partition per stateful operator per
-    // batch. Size the state partitioning to the workload, not the batch
-    // default — at bench event counts a handful of stores is right; on a
-    // real cluster this is sized to executors (state scales out by key).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+  /** Rows per micro-batch up to which `run` evaluates expressions
+    * interpreted (see [[withRunConf]]). Measured on 4 cores, events/s of
+    * q3/q4/q5/q7/q8/q11 (geometric mean, three alternating pairs of JVMs):
+    * interpreted +20 % at 10,000 rows per batch, every query faster; at
+    * 100,000 it lost 10 % (q5 −35 %, q7 −41 %), where per-row evaluation
+    * outweighs compilation. At 1,000 rows the 13 queries gain 23 %. */
+  private[graft] val InterpretedMaxBatchRows = 10000L
+
+  /** Runs `body` under the session SQL configuration `run` uses for `n`
+    * events at `batchRows` rows per micro-batch, restoring each key's
+    * previous value (or unsetting it) afterwards. Every key is read when
+    * a query starts, so the scope must enclose `start()`:
+    *  - shuffle partitions sized to the workload: stateful micro-batch
+    *    cost is dominated by per-batch state-store commits, one store per
+    *    shuffle partition per stateful operator per batch; at bench event
+    *    counts a handful of stores is right, on a cluster this is sized to
+    *    executors (state scales out by key);
+    *  - [[graft.streaming.LocalCheckpointFileManager]]: java.nio atomic
+    *    renames instead of the Hadoop FileContext local adapter (measured
+    *    ~130 ms per checkpoint file), with the same rename-into-place
+    *    atomicity;
+    *  - no CRC sidecars: they duplicate what the rename protocol already
+    *    guarantees, at one more file write per commit;
+    *  - the trailing no-data batch kept: it advances the watermark past
+    *    the drained prefix so stateful queries EMIT their complete windows
+    *    (without it a coarse batching would report throughput on output
+    *    that never materialized);
+    *  - at most [[InterpretedMaxBatchRows]] rows per micro-batch,
+    *    `spark.sql.codegen.factoryMode=NO_CODEGEN`: the expression-level
+    *    generators (projections, predicates, orderings, row joiners of the
+    *    state-store and join operators) evaluate interpreted, while
+    *    whole-stage codegen stays on. Generated, each is a Janino compile
+    *    of 12–15 ms that small batches never pay back: Spark's codegen
+    *    cache is keyed by (context classloader, source) and every
+    *    streaming query runs its tasks under a fresh executor classloader
+    *    (its cloned session's), so each run compiles its classes again
+    *    (36 for a warm q5 run of five micro-batches, 6 interpreted), and every new watermark
+    *    value (`ts <= <literal>`) adds one per micro-batch. Above the
+    *    bound the key is left as the session has it. The conf is internal
+    *    in Spark 4.1; NexmarkStreamingSpec pins that it is honoured (new
+    *    watermarks compile no class). */
+  private[graft] def withRunConf[T](spark: SparkSession, n: Long, batchRows: Long)(
+      body: => T): T = {
     val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toLong)
       .getOrElse(math.max(2, math.min(16, n / 50000)))
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // Local checkpoints: java.nio atomic renames instead of the Hadoop
-    // FileContext local adapter (~130 ms per checkpoint file on this
-    // container — the per-batch fixed cost that dominated stateful
-    // queries). Same rename-into-place atomicity; see the class scaladoc.
-    val prevFm = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
-    val prevCk = spark.conf.getOption("spark.sql.streaming.checkpoint.fileChecksum.enabled")
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      classOf[graft.streaming.LocalCheckpointFileManager].getName)
-    // CRC sidecars duplicate what the local page cache + rename protocol
-    // already guarantee, and each costs another file write per commit
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    // Keep the trailing no-data batch: it advances the watermark past the
-    // drained prefix so stateful queries EMIT their complete windows — with
-    // it disabled a coarse batching would report throughput on output that
-    // never materialized
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val ev = stream(spark, n, batchRows)
-    try {
-      val t0 = System.nanoTime()
-      if (name == "q4" || name == "q6" || name == "q9") {
-        val out = twoStage(spark, name, ev, ckpt, timeoutMs)
-        if (out.isEmpty) return None
-        out.get.write.format("noop").mode("overwrite").save() // final agg is part of the cost
-        return Some(n / ((System.nanoTime() - t0) / 1e9))
+    val set = Seq(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[graft.streaming.LocalCheckpointFileManager].getName,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
+      (if (batchRows <= InterpretedMaxBatchRows)
+        Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN") else Nil)
+    val conf = spark.conf
+    val explicit = conf.getAll
+    val prev = set.map { case (k, _) => k -> explicit.get(k) }
+    set.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
+  /** Run one query to completion under Trigger.AvailableNow; returns
+    * events/sec, or None if this query isn't streaming-expressible or the
+    * engine rejects the plan.
+    *
+    * A micro-batch's cost is mostly fixed, not per row. Traced at 1,000
+    * rows per batch on 4 cores (70 micro-batches of the 13 queries):
+    * `addBatch` 168 ms a batch with generated expressions, 129 ms
+    * interpreted (the Janino compiles [[withRunConf]] removes), query
+    * planning 42 ms, and ≤ 2 ms each for the WAL, offset and state
+    * commits. So the default is two data micro-batches (plus the
+    * watermark-flush no-data batch); latency-sensitive callers size
+    * `rowsPerBatch` down, the knob being Spark's
+    * maxOffsetsPerTrigger-style admission control. */
+  def run(spark: SparkSession, name: String, n: Long,
+      rowsPerBatch: Long = 0L, timeoutMs: Long = 300000L): Option[Double] = {
+    val batchRows = if (rowsPerBatch > 0) rowsPerBatch else math.max(1L, n / 2)
+    val ckpt = Files.createTempDirectory(s"graft-nexmark-stream-$name").toString
+    withRunConf(spark, n, batchRows) {
+      val ev = stream(spark, n, batchRows)
+      try {
+        val t0 = System.nanoTime()
+        val finished =
+          if (name == "q4" || name == "q6" || name == "q9")
+            twoStage(spark, name, ev, ckpt, timeoutMs).exists { out =>
+              out.write.format("noop").mode("overwrite").save() // final agg is part of the cost
+              true
+            }
+          else {
+            val sink = if (name == "q10") {
+              val outPath = Files.createTempDirectory("graft-q10-stream").resolve("logs").toString
+              val out = Nexmark.bidsFrom(ev)
+                .withWatermark("ts", "10 seconds")
+                .withColumn("win", window(col("ts"), "10 seconds"))
+                .select(col("auction"), col("bidder"), col("price"), col("ts"),
+                  date_format(col("win.start"), "yyyy-MM-dd").as("day"),
+                  date_format(col("win.start"), "HH-mm").as("hhmm"))
+              Some(out.writeStream.format("parquet").option("path", outPath)
+                .partitionBy("day", "hhmm"))
+            } else plans(ev).get(name).map(_.writeStream.format("noop"))
+            sink.exists { w =>
+              val q = w.option("checkpointLocation", ckpt)
+                .trigger(Trigger.AvailableNow()).start()
+              q.awaitTermination(timeoutMs) || { q.stop(); false }
+            }
+          }
+        if (finished) Some(n / ((System.nanoTime() - t0) / 1e9)) else None
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[nexmark-streaming] $name: ${e.getMessage}")
+          None
       }
-      val q = if (name == "q10") {
-        val outPath = Files.createTempDirectory("graft-q10-stream").resolve("logs").toString
-        val out = Nexmark.bidsFrom(ev)
-          .withWatermark("ts", "10 seconds")
-          .withColumn("win", window(col("ts"), "10 seconds"))
-          .select(col("auction"), col("bidder"), col("price"), col("ts"),
-            date_format(col("win.start"), "yyyy-MM-dd").as("day"),
-            date_format(col("win.start"), "HH-mm").as("hhmm"))
-        out.writeStream.format("parquet")
-          .option("path", outPath).option("checkpointLocation", ckpt)
-          .partitionBy("day", "hhmm")
-          .trigger(Trigger.AvailableNow()).start()
-      } else {
-        plans(ev).get(name) match {
-          case None => return None
-          case Some(df) =>
-            df.writeStream.format("noop")
-              .option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow()).start()
-        }
-      }
-      if (!q.awaitTermination(timeoutMs)) { q.stop(); return None }
-      // SPARK_GRAFT_STREAM_DEBUG=1 dumps per-batch duration breakdowns so
-      // fixed micro-batch overheads are measurable, not guessed at
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[stream-debug] $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-        }
-      Some(n / ((System.nanoTime() - t0) / 1e9))
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[nexmark-streaming] $name: ${e.getMessage}")
-        None
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      def restore(key: String, v: Option[String]): Unit =
-        v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      restore("spark.sql.streaming.checkpointFileManagerClass", prevFm)
-      restore("spark.sql.streaming.checkpoint.fileChecksum.enabled", prevCk)
-      restore("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
   }
 }
