@@ -1,7 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -13,11 +12,15 @@ import graft.functions._
   * cluster. Scale anatomy of the LSH path:
   *
   *   scan → shingle → signature            (no shuffle, computed in scan stage)
-  *   → explode bands → shuffle on (band, hash)   (the ONLY wide exchange;
-  *                                          bucket sizes are ~uniform because
-  *                                          band hashes are 64-bit)
-  *   → per-bucket pair generation → distinct pairs
-  *   → verify join (2 shuffles on doc id to fetch shingle sets)
+  *   → explode bands → shuffle on (band, hash)   (bucket sizes are ~uniform
+  *                                          because band hashes are 64-bit)
+  *   → per-bucket pair generation → shuffle on the pair (band-match count)
+  *   → verify join (join-back on doc id to fetch shingle sets)
+  *
+  * The incremental path ([[minhashNearDupsAgainstIndex]]) aggregates only
+  * the index band rows in buckets the increment touches and forms the
+  * new×old pairs once: 7 jobs for a 400-document increment against a
+  * persisted 1,600-document index (was 21).
   *
   * A hot bucket (thousands of identical docs) would quadratically blow up
   * pair generation — `maxBucketSize` caps it, mirroring the skip-huge-
@@ -58,10 +61,6 @@ object Dedup {
       .withColumnRenamed("col", "band_hash")
   }
 
-  /** Candidate near-dup pairs: docs sharing ≥1 LSH band bucket.
-    * Returns distinct (id_a < id_b) pairs with both shingle sets attached
-    * via a join-back against the (id → shingles) projection — two narrow
-    * hash joins instead of shingle payloads riding the band shuffle. */
   /** Candidate near-dup id pairs with their band-agreement count.
     *
     * Pair generation: one aggregate per bucket — the size cap and the
@@ -174,8 +173,8 @@ object Dedup {
     * on (band, band_hash): new×new and old×old pairs are never formed,
     * so per-bucket work is |bucket_new|×|bucket_old| — proportional to
     * the increment, not the corpus. Hot buckets are capped per side
-    * BEFORE the join (two narrow count aggregates + semi joins), the
-    * same skip-huge-cluster guard as the symmetric path. */
+    * BEFORE pairing, the same skip-huge-cluster guard as the symmetric
+    * path. */
   def minhashNearDupsAgainst(newDf: DataFrame, corpusDf: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.7,
       shingleN: Int = 5, numHashes: Int = 200, bands: Int = 50,
@@ -220,48 +219,41 @@ object Dedup {
         charShingleHashes(col(textCol), index.shingleN).as("sh"))))
 
   /** [[minhashNearDupsAgainst]] over a prebuilt [[BandIndex]]: the form
-    * the incremental loop actually runs, so consecutive increments reuse
-    * (and append to) one index instead of re-banding history every cycle.
-    * Hot buckets are capped per side BEFORE the join, as in the symmetric
-    * path. */
-  // (persistence: see saveBandIndex/loadBandIndex below — the nightly
-  // loop's storage layer)
+    * the incremental loop runs, so consecutive increments reuse (and
+    * append to) one index instead of re-banding history every cycle
+    * (persistence: [[saveBandIndex]] / [[loadBandIndex]]).
+    *
+    * The candidate pairs are formed once. The increment's ids collect per
+    * (band, band_hash) bucket, capped at `maxBucketSize`; only the index
+    * band rows in those buckets join them and collect and cap the same
+    * way. Caps count rows: a null id counts toward its bucket's cap but
+    * never pairs. Exploding both lists and counting per (new_id,
+    * corpus_id) keeps pairs sharing ≥ `minBandMatches` buckets. The
+    * verify broadcasts the pairs into the index.shingles scan (never
+    * shuffled), then joins the increment's shingle sets; shingled after
+    * the join instead, `sh_a` would be inlined into every predicate. */
   def minhashNearDupsAgainstIndex(newDf: DataFrame, index: BandIndex,
       idCol: String, textCol: String, threshold: Double = 0.7,
       maxBucketSize: Int = 1000, minBandMatches: Int = 2): DataFrame = {
-    def capped(b: DataFrame) = {
-      val ok = b.groupBy("band", "band_hash")
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBucketSize)
-        .select("band", "band_hash")
-      b.join(ok, Seq("band", "band_hash"), "left_semi")
-    }
-    val newBands = minhashBands(newDf, idCol, textCol,
-      index.shingleN, index.numHashes, index.nBands)
-    val pairs = capped(newBands).select(col("band"), col("band_hash"), col("id").as("new_id"))
-      .join(capped(index.bands).select(col("band"), col("band_hash"), col("id").as("corpus_id")),
-        Seq("band", "band_hash"))
+    val newBuckets = minhashBands(newDf, idCol, textCol,
+        index.shingleN, index.numHashes, index.nBands)
+      .groupBy("band", "band_hash")
+      .agg(collect_list(col("id")).as("new_ids"), count(lit(1)).as("__n"))
+      .filter(col("__n") <= maxBucketSize)
+    val pairs = index.bands.join(newBuckets.drop("__n"), Seq("band", "band_hash"))
+      .groupBy("band", "band_hash")
+      .agg(first(col("new_ids")).as("new_ids"),
+        collect_list(col("id")).as("corpus_ids"), count(lit(1)).as("__n"))
+      .filter(col("__n") <= maxBucketSize)
+      .select(explode(col("new_ids")).as("new_id"), col("corpus_ids"))
+      .select(col("new_id"), explode(col("corpus_ids")).as("corpus_id"))
       .groupBy("new_id", "corpus_id").agg(count(lit(1)).as("n_band_matches"))
       .filter(col("n_band_matches") >= minBandMatches)
-    // Verification join-back, SURVIVORS ONLY (the same order-of-operations
-    // rule as minhashCandidates): the candidate ids — bounded by the
-    // increment's pair fanout, never the corpus — reach both shingle
-    // sources as BROADCAST semi-joins, so neither the increment's text
-    // nor the corpus-sized shingle table is ever shuffled. The previous
-    // formulation joined the full index.shingles by corpus_id: at 10M
-    // docs that shuffle-writes the ~100 GB shingle payload (measured:
-    // ENOSPC on a 64 GB-free disk at scale 100); survivor shingles are
-    // a few GB. The `pairs` subtree appears in the semi-join probes too —
-    // its exchanges (band pipelines, pair aggregate) are identical
-    // subtrees and Spark's exchange reuse materializes each once.
-    val shNew = newDf.select(col(idCol).as("new_id"), col(textCol).as("__t"))
-      .join(broadcast(pairs.select("new_id").distinct()), Seq("new_id"), "left_semi")
-      .select(col("new_id"),
-        charShingleHashes(col("__t"), index.shingleN).as("sh_a"))
-    val shOld = index.shingles.select(col("id").as("corpus_id"), col("sh").as("sh_b"))
-      .join(broadcast(pairs.select("corpus_id").distinct()),
-        Seq("corpus_id"), "left_semi")
-    pairs.join(shNew, "new_id").join(shOld, "corpus_id")
+    broadcast(pairs)
+      .join(index.shingles.select(col("id").as("corpus_id"), col("sh").as("sh_b")),
+        "corpus_id")
+      .join(newDf.select(col(idCol).as("new_id"),
+        charShingleHashes(col(textCol), index.shingleN).as("sh_a")), "new_id")
       .filter(sizeCompatible(col("sh_a"), col("sh_b"), threshold))
       .withColumn("jaccard_sim", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard_sim") > threshold)
@@ -315,21 +307,30 @@ object Dedup {
   }
 
   /** Streaming incremental dedup: a document STREAM deduplicated against
-    * a static corpus, one [[minhashNearDupsAgainst]] per micro-batch via
-    * foreachBatch — the shape a production ingest pipeline runs (each
+    * a static corpus, one [[minhashNearDupsAgainstIndex]] per micro-batch
+    * via foreachBatch — the shape a production ingest pipeline runs (each
     * arriving crawl shard is pair-checked against the index; the index
-    * itself updates on a slower batch cadence). The static side's bands
-    * are computed once and persisted by the caller if the corpus is hot.
+    * itself updates on a slower batch cadence). The corpus's [[BandIndex]]
+    * is built once, but as a plan every micro-batch re-evaluates; pass a
+    * persisted or loaded index to the overload below to avoid that.
     * Returns the started query; matched cross-side pairs go to `sink`. */
   def streamingDedupAgainst(stream: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, sink: (DataFrame, Long) => Unit,
       threshold: Double = 0.7, shingleN: Int = 5, numHashes: Int = 200,
       bands: Int = 50): org.apache.spark.sql.streaming.StreamingQuery =
+    streamingDedupAgainst(stream,
+      buildBandIndex(corpus, idCol, textCol, shingleN, numHashes, bands),
+      idCol, textCol, sink, threshold)
+
+  /** [[streamingDedupAgainst]] over a prebuilt [[BandIndex]]. */
+  def streamingDedupAgainst(stream: DataFrame, index: BandIndex,
+      idCol: String, textCol: String, sink: (DataFrame, Long) => Unit,
+      threshold: Double): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(minhashNearDupsAgainst(batch, corpus, idCol, textCol,
-          threshold, shingleN, numHashes, bands), batchId)
+        sink(minhashNearDupsAgainstIndex(batch, index, idCol, textCol,
+          threshold), batchId)
       }
       .start()
 

@@ -379,6 +379,78 @@ class PlanSpec extends GraftSpec {
     assert(offenders.isEmpty, s"fact-table broadcasts: $offenders")
   }
 
+  test("incremental dedup forms its pairs once and caps only touched index buckets") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.GraftTestBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the benchmark's shape: 400 new documents against a persisted index
+    // over 1,600, read from parquet
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-dedup").toFile
+    val docs = {
+      spark.range(0, 2000, 1, 4).as[Long]
+        .map(id => (id, graft.sources.PipelineCorpus.docText(id)))
+        .toDF("doc_id", "text").write.parquet(s"$dir/docs")
+      spark.read.parquet(s"$dir/docs")
+    }
+    val ix = graft.dedup.Dedup.buildBandIndex(docs.filter(col("doc_id") % 5 =!= 4),
+      "doc_id", "text")
+    ix.bands.persist(); ix.shingles.persist()
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    try {
+      ix.bands.count(); ix.shingles.count()
+      val df = graft.dedup.Dedup.minhashNearDupsAgainstIndex(
+        docs.filter(col("doc_id") % 5 === 4), ix, "doc_id", "text")
+      GraftTestBridge.drainListeners(sc)
+      sc.addSparkListener(listener)
+      val found = try { val n = df.collect().length; GraftTestBridge.drainListeners(sc); n }
+        finally sc.removeSparkListener(listener)
+      assert(found > 0)
+      // the AQE final plan, with each query stage's plan inlined
+      def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case o => o.children
+      }
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+      val plan = nodes(df.queryExecution.executedPlan)
+      val pairExchanges = plan.count {
+        case e: ShuffleExchangeExec => e.outputPartitioning match {
+          case HashPartitioning(keys, _) =>
+            keys.map(_.references.map(_.name).mkString) == Seq("new_id", "corpus_id")
+          case _ => false
+        }
+        case _ => false
+      }
+      assert(pairExchanges == 1, s"pair exchanges: $pairExchanges\n${df.queryExecution.executedPlan}")
+      // an aggregate may read the index's band rows only through a join
+      // with the increment's buckets
+      def bandsUnjoined(p: SparkPlan): Boolean = p match {
+        case _: BaseJoinExec => false
+        case s: InMemoryTableScanExec => s.output.exists(_.name == "band_hash")
+        case o => kids(o).exists(bandsUnjoined)
+      }
+      val wholeIndexAggs = plan.collect { case a: BaseAggregateExec if bandsUnjoined(a) => a }
+      assert(wholeIndexAggs.isEmpty,
+        s"aggregates over the whole index:\n${wholeIndexAggs.mkString("\n")}")
+      assert(jobs.get <= 10, s"${jobs.get} jobs")
+    } finally {
+      ix.bands.unpersist(); ix.shingles.unpersist()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
   test("cdc apply: snapshot anti-join is broadcast; only the increment shuffles") {
     val snap = graft.sources.Tables.documents(spark, sf).select("doc_id", "text")
     val changes = snap.limit(50)

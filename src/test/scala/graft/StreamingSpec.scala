@@ -72,29 +72,41 @@ class StreamingSpec extends GraftSpec {
   test("streaming incremental dedup pairs arriving docs against a static corpus") {
     implicit val ctx = spark.sqlContext
     import scala.collection.mutable
+    import org.apache.spark.sql.DataFrame
+    import graft.dedup.Dedup
     val corpus = Seq(
       (0L, "the quick brown fox jumps over the lazy dog and runs away fast"),
       (2L, "completely different content about database query optimization engines"))
       .toDF("doc_id", "text")
-    val input = MemoryStream[(Long, String)]
-    val got = mutable.Set.empty[(Long, Long)]
-    val q = graft.dedup.Dedup.streamingDedupAgainst(
-      input.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text",
-      sink = (pairs, _) => got.synchronized {
+    // the corpus form, and the prebuilt-index form over a saved and
+    // loaded index, must report the same pairs
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-index").toFile
+    Dedup.saveBandIndex(Dedup.buildBandIndex(corpus, "doc_id", "text",
+      numHashes = 60, bands = 20), s"$dir/index")
+    type Sink = (DataFrame, Long) => Unit
+    val forms = Seq[(DataFrame, Sink) => org.apache.spark.sql.streaming.StreamingQuery](
+      (docs, sink) => Dedup.streamingDedupAgainst(docs, corpus, "doc_id", "text", sink,
+        threshold = 0.5, numHashes = 60, bands = 20),
+      (docs, sink) => Dedup.streamingDedupAgainst(docs,
+        Dedup.loadBandIndex(spark, s"$dir/index"), "doc_id", "text", sink, 0.5))
+    try forms.foreach { start =>
+      val input = MemoryStream[(Long, String)]
+      val got = mutable.Set.empty[(Long, Long)]
+      val q = start(input.toDF().toDF("doc_id", "text"), (pairs, _) => got.synchronized {
         got ++= pairs.select("new_id", "corpus_id")
           .collect().map(r => (r.getLong(0), r.getLong(1)))
-      },
-      threshold = 0.5, numHashes = 60, bands = 20)
-    try {
-      // batch 1: a near-dup of corpus doc 0 and an unrelated doc
-      input.addData((101L, "the quick brown fox jumps over the lazy dog and runs away quickly"),
-        (102L, "unrelated text about streaming watermark semantics and triggers"))
-      q.processAllAvailable()
-      // batch 2: an exact dup of corpus doc 2
-      input.addData((103L, "completely different content about database query optimization engines"))
-      q.processAllAvailable()
-      assert(got.toSet == Set((101L, 0L), (103L, 2L)))
-    } finally stopQuietly(q)
+      })
+      try {
+        // batch 1: a near-dup of corpus doc 0 and an unrelated doc
+        input.addData((101L, "the quick brown fox jumps over the lazy dog and runs away quickly"),
+          (102L, "unrelated text about streaming watermark semantics and triggers"))
+        q.processAllAvailable()
+        // batch 2: an exact dup of corpus doc 2
+        input.addData((103L, "completely different content about database query optimization engines"))
+        q.processAllAvailable()
+        assert(got.toSet == Set((101L, 0L), (103L, 2L)))
+      } finally stopQuietly(q)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
   test("streaming deduplicate keeps first occurrence across micro-batches") {
