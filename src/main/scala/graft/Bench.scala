@@ -342,9 +342,9 @@ object Bench {
           case _ => ()
         }
         try {
-          spark.sql("DROP TABLE IF EXISTS bench_pq_idx")
-          spark.sql("DROP TABLE IF EXISTS bench_pq_idx_codebooks")
-          spark.sql("DROP TABLE IF EXISTS bench_pq_idx_rebalanced_tmp")
+          for (t <- Seq("bench_pq_idx", "bench_pq_idx_codebooks");
+               x <- Seq(t, s"${t}_tmp", s"${t}_old"))
+            spark.sql(s"DROP TABLE IF EXISTS $x")
         } catch { case _: Throwable => }
       }
       brute.unpersist(); qVecs.unpersist()

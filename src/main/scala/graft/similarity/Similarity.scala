@@ -2,7 +2,7 @@ package graft.similarity
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -287,9 +287,8 @@ object Similarity {
           qIds, qVecs, k, roundTo)
       }
     }
-    val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-    val scored = c.crossJoin(broadcast(q))
+    val scored = vectors(corpus, idCol, vecCol)
+      .crossJoin(broadcast(queryVectors(queries, idCol, vecCol)))
       .filter(col("nn_id") =!= col("query_id"))
       .withColumn("sim", round(cosineSim(col("qv"), col("cv")), roundTo))
     rankTopK(scored, k)
@@ -590,36 +589,131 @@ object Similarity {
           .clusterCenters.map(_.toArray)
     }
 
+  // ---- IVF indexes: one core, two per-cell encodings ----------------------
+  //
+  // IVF (inverted-file) ANN: a k-means coarse codebook (`centers`, a few
+  // KB, driver-held) routes every corpus vector to its nearest cell; a
+  // query probes its `nprobe` nearest cells and scores only their rows,
+  // then [[rankTopK]] merges a bounded top-k. With nprobe = nlist this is
+  // exactly brute force over what the cells hold (IvfIndexSpec pins it).
+  // Every public IVF / IVF-PQ entry point composes the same pieces:
+  //  - fit: [[fitCenters]] (coarse only) or [[fitPq]] (coarse + m PQ
+  //    codebooks, all from ONE bounded deterministic sample);
+  //  - [[vectors]]: the (nn_id, cv) / (query_id, qv) projection;
+  //  - [[writeCells]]: route, encode and write the cell-bucketed table —
+  //    one bucket (= one file, via the cell repartition) per cell, counted
+  //    as centers.length, never the requested nlist (a thin-sample fit can
+  //    return fewer centers, and appends must match the build's spec);
+  //  - [[cellScores]]: probe, gather the probed cells' rows (an in-job
+  //    broadcast join against the routed corpus, or bucket-file seeks into
+  //    a persisted table via graft.api.Lookup, which reads nprobe of the
+  //    nlist files), score; [[rerankTopK]] ranks, optionally re-scoring
+  //    the top-`rerank` shortlist exactly against raw vectors (IVFADC+R).
+  // The one real difference is the per-cell [[Encoding]]:
+  //  - raw vectors: a row stores `cv`; sim = cosine(qv, cv);
+  //  - PQ codes (Jégou et al., TPAMI'11): a row stores m code bytes and
+  //    its norm (~16 B instead of 256 B at m=8); each query builds one
+  //    m×ksub lookup table of sub-space inner products and sim is the
+  //    asymmetric-distance cosine pqAdc(codes, lut) / (qnorm·norm). PQ
+  //    quantizes raw vectors, not cell residuals, so codes survive a coarse
+  //    re-clustering; the index holds no raw vectors, so the PQ rerank and
+  //    rebalance read them from a caller-given source.
+  // Persisted layout: `<table>` bucketed by cell — (nn_id, cv, cell) raw,
+  // (nn_id, cell, codes, norm) PQ — plus `<table>_codebooks` (kind, i, c,
+  // v) for IVF-PQ. Appends
+  // route new vectors with the existing codebook (cost ∝ increment, no
+  // read of history); [[ivfCellSkew]] measures the drift that calls for a
+  // rebalance, which refits the coarse codebook, rewrites the layout into
+  // `_tmp` tables and swaps them in as ONE set through Bm25.swapTables'
+  // rename-aside (the table being rebuilt is also the lazy scan source, so
+  // overwriting it in place would be data loss). A crash at any step
+  // leaves complete tables that Bm25.repairSwap turns into the whole
+  // pre-state or the whole post-state — never new cells next to the old
+  // coarse codebook; appends, rebalances and [[loadPqCodebooks]] repair
+  // on entry, the query paths do not. Builds and rebalances return the
+  // codebook; queries answer on whichever codebook they are handed.
+
   /** Nearest-centroid assignment over a driver-held codebook — the native
     * codegen'd graft.plans.NearestCentroid kernel (flat centers +
-    * partial-distance early exit, identical loop/tie semantics). The UDF
-    * form boxed every vector into a Seq[Double] per corpus row, which
-    * dominated the 20M-row assignment scans. */
+    * partial-distance early exit). */
   private[graft] def nearestCell(centers: Array[Array[Double]]): Column => Column =
     (c: Column) => nearestCentroid(c, centers)
 
-  /** IVF (inverted-file) ANN: k-means coarse quantization. A small
-    * centroid codebook is learned from the corpus (driver-held, a few KB);
-    * each corpus vector is assigned to its nearest cell (one distributed
-    * pass); a query probes its `nprobe` nearest cells and scores only
-    * those candidates — the standard sub-linear scale path when LSH's
-    * data-independent buckets underperform on clustered data. With
-    * nprobe = nlist this is exactly brute force (recall 1), which is the
-    * contract the spec pins.
-    *
-    * At 100 TB: training samples the corpus (a 10% deterministic sample —
-    * k-means cell boundaries stabilize long before full-corpus coverage,
-    * and the fit is the only multi-pass stage); assignment is a scan-stage
-    * map; the (cell → vectors) layout would be persisted bucketed by cell
-    * so queries touch only their probed buckets' files. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nlist: Int = 16,
-      nprobe: Int = 4, seed: Long = 42L, maxIter: Int = 5,
-      trainFraction: Double = 0.1): DataFrame = {
-    val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
-    val centers = fitCenters(c, nlist, seed, maxIter, trainFraction)
-    val assigned = c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
+  private type Books = Array[Array[Array[Double]]]
+
+  /** What a cell row stores next to (nn_id, cell), the per-query columns
+    * its score reads, and the score over a (query, row) pair. */
+  private final case class Encoding(encode: DataFrame => DataFrame,
+      queryCols: Seq[(String, Column)], sim: Column)
+
+  private val RawVectors = Encoding(identity, Nil, cosineSim(col("qv"), col("cv")))
+
+  private def pqCodes(books: Books): Encoding = {
+    val m = books.length
+    val ksub = books(0).length
+    val dsub = books(0)(0).length
+    val lut = udf { (qv: Seq[Double]) =>
+      val t = new Array[Double](m * ksub)
+      var j = 0
+      while (j < m) {
+        val cb = books(j); var c2 = 0
+        while (c2 < cb.length) {
+          var s = 0.0; var d = 0
+          while (d < dsub) { s += qv(j * dsub + d) * cb(c2)(d); d += 1 }
+          t(j * ksub + c2) = s; c2 += 1
+        }
+        j += 1
+      }
+      t
+    }
+    // native ADC reads the m addressed LUT entries off ArrayData in codegen
+    Encoding(pqEncode(_, "nn_id", "cv", books, keepCols = Seq("cell")),
+      Seq("lut" -> lut(col("qv")), "qnorm" -> l2Norm(col("qv"))),
+      pqAdc(col("codes"), col("lut")) / (col("qnorm") * col("norm")))
+  }
+
+  private def l2Norm(v: Column): Column =
+    sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x * x))
+
+  /** (nn_id, cv) — or (query_id, qv) — with the vector as array<double>. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String,
+      id: String = "nn_id", vec: String = "cv"): DataFrame =
+    df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as(vec))
+
+  private def queryVectors(queries: DataFrame, idCol: String, vecCol: String) =
+    vectors(queries, idCol, vecCol, "query_id", "qv")
+
+  /** Coarse + PQ codebooks from ONE sampling scan when the bounded sample
+    * fits locally; the Spark ML fallback pays one corpus scan per fit. */
+  private def fitPq(c: DataFrame, nlist: Int, m: Int, ksub: Int, seed: Long,
+      maxIter: Int, fraction: Double): (Array[Array[Double]], Books) =
+    collectSample(c.select(col("cv")), math.max(nlist, ksub).toLong * 10, seed,
+        fraction) match {
+      case Some(s) =>
+        (localKMeans(s, nlist, maxIter, seed), pqTrainLocal(s, m, ksub, seed, maxIter))
+      case None => (fitCenters(c, nlist, seed, maxIter, fraction),
+        pqTrain(c, "cv", m, ksub, seed, maxIter, fraction))
+    }
+
+  /** (nn_id, cv, cell): each vector of `c` routed to its nearest cell. */
+  private def routed(c: DataFrame, centers: Array[Array[Double]]): DataFrame =
+    c.withColumn("cell", nearestCell(centers)(col("cv"))).select("nn_id", "cv", "cell")
+
+  private def writeCells(c: DataFrame, centers: Array[Array[Double]],
+      enc: Encoding, table: String, mode: String): Unit =
+    enc.encode(routed(c, centers))
+      .repartition(col("cell"))
+      .write.mode(mode)
+      .bucketBy(centers.length, "cell").sortBy("cell")
+      .format("parquet").saveAsTable(table)
+
+  /** (query_id, nn_id, sim) over the probed cells: `cells` is the (nn_id,
+    * cv) corpus routed and encoded in-job, or a persisted table read by
+    * bucket-file seeks. Each vector lives in exactly one cell, so no pair
+    * repeats. */
+  private def cellScores(cells: Either[DataFrame, (SparkSession, String)],
+      centers: Array[Array[Double]], enc: Encoding, queries: DataFrame,
+      idCol: String, vecCol: String, nprobe: Int): DataFrame = {
     val probeCells = udf { (v: Seq[Double]) =>
       centers.zipWithIndex.map { case (ctr, i) =>
         var s = 0.0; var j = 0
@@ -627,68 +721,66 @@ object Similarity {
         (s, i)
       }.sortBy(_._1).take(nprobe).map(_._2)
     }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("cell", explode(probeCells(col("qv"))))
-    val scored = assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-    rankTopK(scored, k)
+    def probe(cellCol: String): DataFrame =
+      enc.queryCols.foldLeft(queryVectors(queries, idCol, vecCol)) {
+        case (q, (name, c)) => q.withColumn(name, c)
+      }.withColumn(cellCol, explode(probeCells(col("qv"))))
+    val pairs = cells match {
+      case Left(c) => enc.encode(routed(c, centers)).join(broadcast(probe("cell")), Seq("cell"))
+      case Right((spark, table)) =>
+        graft.api.Lookup.lookupJoin(spark, probe("qcell"), table, "qcell", "cell")
+    }
+    simRows(pairs.filter(col("nn_id") =!= col("query_id")), enc.sim)
   }
 
-  /** Persist an IVF index as a CELL-BUCKETED table: one bucket (= one
-    * file, via the cell repartition) per k-means cell, so a query's
-    * `nprobe` cells resolve to `nprobe` bucket files. Returns the
-    * centroid codebook (driver-held, a few KB — ship it with the table).
-    * This is the "bucketed-by-cell persistence" serving layout: at 100 TB
-    * the scan cost per query is nprobe/nlist of the corpus, independent
-    * of executor count. */
+  private def simRows(pairs: DataFrame, sim: Column): DataFrame =
+    pairs.withColumn("sim", round(sim, 4)).select("query_id", "nn_id", "sim")
+
+  /** Top-k of `scored`; with `rerank > 0`, the top-`rerank` shortlist is
+    * re-scored exactly against `raw` (nn_id, cv) — one broadcast semi-join
+    * back to the raw vectors, cost ∝ shortlist. */
+  private def rerankTopK(scored: DataFrame, raw: => DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, rerank: Int): DataFrame =
+    if (rerank <= 0) rankTopK(scored, k)
+    else {
+      val shortlist = rankTopK(scored, rerank).select("query_id", "nn_id")
+      rankTopK(simRows(raw.join(broadcast(shortlist), Seq("nn_id"))
+        .join(broadcast(queryVectors(queries, idCol, vecCol)), Seq("query_id")),
+        RawVectors.sim), k)
+    }
+
+  /** IVF over raw vectors, fit and queried in one job. At 100 TB the fit
+    * samples the corpus and assignment is a scan-stage map. */
+  def ivfTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, nlist: Int = 16,
+      nprobe: Int = 4, seed: Long = 42L, maxIter: Int = 5,
+      trainFraction: Double = 0.1): DataFrame = {
+    val c = vectors(corpus, idCol, vecCol)
+    val centers = fitCenters(c, nlist, seed, maxIter, trainFraction)
+    rankTopK(cellScores(Left(c), centers, RawVectors, queries, idCol, vecCol, nprobe), k)
+  }
+
+  /** Persist a raw-vector IVF index; returns its coarse codebook. */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       table: String, nlist: Int = 16, seed: Long = 42L,
       maxIter: Int = 5, trainFraction: Double = 0.1): Array[Array[Double]] = {
-    val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
+    val c = vectors(corpus, idCol, vecCol)
     val centers = fitCenters(c, nlist, seed, maxIter, trainFraction)
-    val assigned = c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-    // bucket by centers.length, NOT the requested nlist: the fit can
-    // return fewer centers than asked (kk = min(k, sampleRows) on a thin
-    // corpus), and appendToIvfIndex buckets by centers.length — a mismatch
-    // would fail every later append on the bucket spec (r7 advice)
-    assigned.repartition(col("cell"))
-      .write.mode("overwrite")
-      .bucketBy(centers.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
+    writeCells(c, centers, RawVectors, table, "overwrite")
     centers
   }
 
-  /** Fold NEW vectors into a persisted IVF index without refitting — the
-    * nightly-ingest maintenance step, mirroring Dedup.appendToBandIndex:
-    * assign each new vector to its nearest existing centroid (broadcast
-    * codebook, one scan-stage pass) and APPEND to the cell-bucketed table
-    * with the same bucket spec. No read of the existing index, no shuffle
-    * of history — the append costs only the increment. Centroids drift as
-    * the corpus grows; production refits the codebook when cell-population
-    * skew crosses a threshold (the codebook is a few KB — refit is cheap,
-    * the re-bucketing rewrite is the real cost being deferred).
-    * IvfIndexSpec pins the law: full-probe queries on (build A, append B)
-    * equal brute force over A ∪ B. */
+  /** Append new vectors to a persisted IVF index under its codebook. */
   def appendToIvfIndex(table: String, centers: Array[Array[Double]],
       newVecs: DataFrame, idCol: String, vecCol: String): Unit = {
-    newVecs.select(col(idCol).as("nn_id"),
-        col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("cell", nearestCell(centers)(col("cv")))
-      .repartition(col("cell"))
-      .write.mode("append")
-      .bucketBy(centers.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
+    graft.text.Bm25.repairSwap(newVecs.sparkSession, Seq(table))
+    writeCells(vectors(newVecs, idCol, vecCol), centers, RawVectors, table, "append")
   }
 
-  /** Cell-population skew of a persisted IVF index (max/mean cell
-    * population) — ONE narrow aggregation over the index's cell column.
-    * This is the number maintenance thresholds on: appends keep the
-    * original codebook (the cheap path), so a drifting corpus
-    * concentrates into few cells and per-query probe cost rises with the
-    * skew. */
-  def ivfCellSkew(spark: org.apache.spark.sql.SparkSession, table: String): Double = {
+  /** Cell-population skew of a persisted IVF or IVF-PQ index (max/mean
+    * cell population) — ONE narrow aggregation over the cell column; the
+    * number a rebalance thresholds on. */
+  def ivfCellSkew(spark: SparkSession, table: String): Double = {
     val r = spark.table(table).groupBy("cell").count()
       .agg(max(col("count")).cast("double"), avg(col("count")))
       .head()
@@ -696,64 +788,25 @@ object Similarity {
     else r.getDouble(0) / r.getDouble(1)
   }
 
-  /** Rebalance a persisted IVF index whose appended increments drifted
-    * the cell populations — the deferred heavy half of the maintenance
-    * loop `appendToIvfIndex` documents: refit the codebook from the
-    * index's OWN vectors (bounded deterministic sample → driver-local
-    * Lloyd, the same fit path as the build), reassign every vector in one
-    * scan stage, and rewrite the cell-bucketed layout into a fresh table
-    * swapped in under the old name. The table being rebuilt is also the
-    * lazy scan source, so an in-place overwrite would be data loss (the
-    * Layout.compact rule); the swap is the only non-atomic step. Returns
-    * the NEW codebook — queries keep answering on the old one until
-    * handed the return value. */
-  def rebalanceIvfIndex(spark: org.apache.spark.sql.SparkSession,
+  /** Refit a persisted IVF index's codebook from its own vectors and
+    * rewrite + swap the layout; returns the NEW codebook. */
+  def rebalanceIvfIndex(spark: SparkSession,
       table: String, nlist: Int = 16, seed: Long = 42L, maxIter: Int = 5,
-      trainFraction: Double = 0.1): Array[Array[Double]] = {
-    val c = spark.table(table).select(col("nn_id"), col("cv"))
-    val centers = fitCenters(c, nlist, seed, maxIter, trainFraction)
-    val tmp = table + "_rebalanced_tmp"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .bucketBy(centers.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(tmp)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    centers
-  }
+      trainFraction: Double = 0.1): Array[Array[Double]] =
+    rewriteAndSwap(spark, table, None, spark.table(table).select(col("nn_id"), col("cv")),
+      nlist, seed, maxIter, trainFraction)
 
-  /** Query a persisted IVF index: each query's `nprobe` nearest cells
-    * are point-looked-up through the bucket-file seek (graft.api.Lookup)
-    * — only the probed cells' files are read, then scoring and the
-    * bounded top-k merge proceed as in ivfTopK. */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
+  /** Query a persisted IVF index through bucket-file seeks. */
+  def ivfTopKIndexed(spark: SparkSession, table: String,
       centers: Array[Array[Double]], queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val probeCells = udf { (v: Seq[Double]) =>
-      centers.zipWithIndex.map { case (ctr, i) =>
-        var s = 0.0; var j = 0
-        while (j < ctr.length) { val d = ctr(j) - v(j); s += d * d; j += 1 }
-        (s, i)
-      }.sortBy(_._1).take(nprobe).map(_._2)
-    }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("qcell", explode(probeCells(col("qv"))))
-    val scored = graft.api.Lookup.lookupJoin(spark, q, table, "qcell", "cell")
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-      .select("query_id", "nn_id", "sim") // each vector lives in exactly one cell: no dup pairs
-    rankTopK(scored, k)
-  }
+      idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame =
+    rankTopK(cellScores(Right((spark, table)), centers, RawVectors, queries,
+      idCol, vecCol, nprobe), k)
 
-  /** Product-quantization codebooks (Jégou et al., TPAMI'11): `m`
-    * independent `ksub`-centroid k-means fits over the vector's disjoint
-    * dim/m-dimensional sub-spaces, each trained on the same deterministic
-    * sample as the IVF coarse quantizer. Returned shape m × ksub × dim/m
-    * — a few hundred KB held on the driver and broadcast to encoders,
-    * exactly like the IVF centroid codebook. */
+  /** Product-quantization codebooks: `m` independent `ksub`-centroid
+    * k-means fits over the vector's disjoint dim/m sub-spaces, trained on
+    * the same deterministic sample as the coarse quantizer; shape m × ksub
+    * × dim/m. */
   def pqTrain(corpus: DataFrame, vecCol: String, m: Int = 8,
       ksub: Int = 256, seed: Long = 42L, maxIter: Int = 5,
       trainFraction: Double = 0.1): Array[Array[Array[Double]]] = {
@@ -790,111 +843,29 @@ object Similarity {
     }
   }
 
-  /** PQ-encode each vector: (nn_id, codes m-byte binary, norm). The 64-dim
-    * float vector (256 B) compresses to m code bytes + one stored norm — the
-    * 100 TB memory story (20M vectors: 5 GB of floats vs ~320 MB of
-    * codes), and the reason a PQ index can stay resident where raw
-    * vectors cannot. Encoding is a scan-stage map with the codebooks in
-    * the task closure (same shape as IVF's probeCells). */
+  /** PQ-encode each vector: (nn_id, keepCols…, codes m-byte binary, norm),
+    * through the native codegen'd graft.plans.PqEncodeCodes (strict <
+    * keeps the first-best code on ties). */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: Array[Array[Array[Double]]],
-      keepCols: Seq[String] = Nil): DataFrame = {
-    // native codegen'd encoder (graft.plans.PqEncodeCodes): flat contiguous
-    // codebooks + primitive input + partial-distance early exit — the UDF
-    // history is in the expression's scaladoc; argmin semantics unchanged
-    // (strict < keeps the first-best code on ties)
+      keepCols: Seq[String] = Nil): DataFrame =
     corpus.select((col(idCol).as("nn_id") +: keepCols.map(col)) ++ Seq(
       col(vecCol).cast("array<double>").as("cv")): _*)
       .select((col("nn_id") +: keepCols.map(col)) ++ Seq(
         pqEncodeCodes(col("cv"), codebooks).as("codes"),
-        sqrt(aggregate(col("cv"), lit(0.0), (acc, x) => acc + x * x))
-          .as("norm")): _*)
-  }
+        l2Norm(col("cv")).as("norm")): _*)
 
-  /** IVF-PQ ANN: coarse k-means cell routing (as [[ivfTopK]]) with
-    * asymmetric-distance PQ scoring inside the probed cells — the
-    * memory-bounded serving shape. Each query precomputes one m×ksub
-    * lookup table of sub-space inner products against the codebooks
-    * (16 KB at m=8/ksub=256, riding the broadcast query row); a
-    * candidate's approximate cosine is m table lookups against its code
-    * bytes — no full-vector arithmetic, and the probed cells need only
-    * codes + norms in memory. `rerank > 0` re-scores the PQ top-`rerank`
-    * shortlist exactly against the raw vectors (one broadcast semi-join
-    * back to the corpus — the standard IVFADC+R refinement), recovering
-    * quantization loss for a cost proportional to the shortlist, not the
-    * corpus. PQ here quantizes raw vectors, not cell residuals: at
-    * cosine similarity (normalized scores) the residual variant's gain
-    * is marginal and the raw form keeps encode independent of the coarse
-    * quantizer, so codes survive an IVF re-clustering. */
+  /** IVF-PQ fit and queried in one job; `rerank > 0` re-scores the PQ
+    * shortlist exactly against the corpus. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nlist: Int = 16,
       nprobe: Int = 4, m: Int = 8, ksub: Int = 256, rerank: Int = 0,
       seed: Long = 42L, maxIter: Int = 5,
       trainFraction: Double = 0.1): DataFrame = {
-    val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
-    // ONE sampling scan feeds all 9 codebooks (coarse + m sub-spaces)
-    // when the bounded sample fits locally; the Spark ML fallback pays
-    // one corpus scan per fit, which dominated the 20M-vector index build
-    val sampleOpt = collectSample(c.select(col("cv")),
-      math.max(nlist, ksub).toLong * 10, seed, trainFraction)
-    val centers: Array[Array[Double]] = sampleOpt match {
-      case Some(s) => localKMeans(s, nlist, maxIter, seed)
-      case None => fitCenters(c, nlist, seed, maxIter, trainFraction)
-    }
-    val books = sampleOpt match {
-      case Some(s) => pqTrainLocal(s, m, ksub, seed, maxIter)
-      case None => pqTrain(corpus, vecCol, m, ksub, seed, maxIter, trainFraction)
-    }
-    val dsub = books(0)(0).length
-    val assigned = c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-    // cell rides through the encoder — the previous join-back re-shuffled
-    // the whole encoded corpus against `assigned` (two wide exchanges of
-    // n rows) just to restore a column the scan already had
-    val encoded = pqEncode(assigned, "nn_id", "cv", books, keepCols = Seq("cell"))
-    val probeCells = udf { (v: Seq[Double]) =>
-      centers.zipWithIndex.map { case (ctr, i) =>
-        var s = 0.0; var j = 0
-        while (j < ctr.length) { val d = ctr(j) - v(j); s += d * d; j += 1 }
-        (s, i)
-      }.sortBy(_._1).take(nprobe).map(_._2)
-    }
-    val lut = udf { (qv: Seq[Double]) =>
-      val t = new Array[Double](m * ksub)
-      var j = 0
-      while (j < m) {
-        val cb = books(j); var c2 = 0
-        while (c2 < cb.length) {
-          var s = 0.0; var d = 0
-          while (d < dsub) { s += qv(j * dsub + d) * cb(c2)(d); d += 1 }
-          t(j * ksub + c2) = s; c2 += 1
-        }
-        j += 1
-      }
-      t
-    }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("lut", lut(col("qv")))
-      .withColumn("qnorm", sqrt(aggregate(col("qv"), lit(0.0), (acc, x) => acc + x * x)))
-      .withColumn("cell", explode(probeCells(col("qv"))))
-    val scored = encoded.join(broadcast(q), Seq("cell"))
-      .filter(col("nn_id") =!= col("query_id"))
-      // native ADC: the UDF version deserialized the full 2048-entry LUT
-      // to a boxed Seq per scored row; pqAdc reads the m addressed
-      // entries off ArrayData inside codegen
-      .withColumn("sim", round(pqAdc(col("codes"), col("lut")) /
-        (col("qnorm") * col("norm")), 4))
-      .select("query_id", "nn_id", "sim")
-    if (rerank <= 0) rankTopK(scored, k)
-    else {
-      val shortlist = rankTopK(scored, rerank).select("query_id", "nn_id")
-      val qv = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      val exact = c.join(broadcast(shortlist), Seq("nn_id"))
-        .join(broadcast(qv), Seq("query_id"))
-        .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-        .select("query_id", "nn_id", "sim")
-      rankTopK(exact, k)
-    }
+    val c = vectors(corpus, idCol, vecCol)
+    val (centers, books) = fitPq(c, nlist, m, ksub, seed, maxIter, trainFraction)
+    rerankTopK(cellScores(Left(c), centers, pqCodes(books), queries, idCol, vecCol, nprobe),
+      c, queries, idCol, vecCol, k, rerank)
   }
 
   /** Approximate top-k via standard multi-table LSH: `tables` independent
@@ -904,12 +875,8 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nBits: Int = 6,
       tables: Int = 8, probes: Int = 0): DataFrame = {
-    val c = signatures(
-      corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv")),
-      "nn_id", "cv", nBits, tables)
-    val q0 = signatures(
-      queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv")),
-      "query_id", "qv", nBits, tables)
+    val c = signatures(vectors(corpus, idCol, vecCol), "nn_id", "cv", nBits, tables)
+    val q0 = signatures(queryVectors(queries, idCol, vecCol), "query_id", "qv", nBits, tables)
     // Multi-probe (Lv et al., VLDB'07, bit-flip simplification): each query
     // additionally probes `probes` Hamming-1 neighbor buckets per table —
     // a near-threshold vector that lands one bit away is still found, so
@@ -936,41 +903,26 @@ object Similarity {
       .dropDuplicates("query_id", "nn_id")
     rankTopK(scored, k)
   }
-  // ---- persisted IVF-PQ index: the complete memory-bounded serving layout
 
-  /** Write the PQ rows (nn_id, cell, codes, norm) of `c` into the
-    * cell-bucketed `table` — raw vectors never land in the index. */
-  private def writePqRows(c: DataFrame, centers: Array[Array[Double]],
-      books: Array[Array[Array[Double]]], table: String, mode: String): Unit = {
-    val assigned = c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-    pqEncode(assigned, "nn_id", "cv", books, keepCols = Seq("cell"))
-      .select("nn_id", "cell", "codes", "norm")
-      .repartition(col("cell"))
-      .write.mode(mode)
-      .bucketBy(centers.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
-  }
+  private def pqTables(table: String): Seq[String] = Seq(table, s"${table}_codebooks")
 
-  /** Persist the coarse + PQ codebooks alongside the codes table, as rows
-    * (kind, i, c, v): ("coarse", 0, cellIdx, centroid) and
-    * ("pq", subspace, code, centroid). A later session reloads them with
-    * [[loadPqCodebooks]] and queries without refitting. */
-  private def saveCodebooks(spark: org.apache.spark.sql.SparkSession,
-      table: String, centers: Array[Array[Double]],
-      books: Array[Array[Array[Double]]]): Unit = {
+  /** Persist the coarse + PQ codebooks as rows (kind, i, c, v):
+    * ("coarse", 0, cellIdx, centroid) and ("pq", subspace, code, centroid). */
+  private def saveCodebooks(spark: SparkSession, name: String,
+      centers: Array[Array[Double]], books: Books): Unit = {
     import spark.implicits._
     val rows =
       centers.zipWithIndex.toSeq.map { case (v, ci) => ("coarse", 0, ci, v.toSeq) } ++
       books.zipWithIndex.toSeq.flatMap { case (book, j) =>
         book.zipWithIndex.toSeq.map { case (v, ci) => ("pq", j, ci, v.toSeq) } }
     rows.toDF("kind", "i", "c", "v").coalesce(1)
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${table}_codebooks")
+      .write.mode("overwrite").format("parquet").saveAsTable(name)
   }
 
-  /** Reload the codebooks persisted by [[buildIvfPqIndex]]. */
-  def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession, table: String)
+  /** Reload the codebooks of a persisted IVF-PQ index. */
+  def loadPqCodebooks(spark: SparkSession, table: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    graft.text.Bm25.repairSwap(spark, pqTables(table))
     import spark.implicits._
     val rows = spark.table(s"${table}_codebooks")
       .select(col("kind"), col("i"), col("c"), col("v"))
@@ -981,138 +933,66 @@ object Similarity {
     (centers, books)
   }
 
-  /** Build a PERSISTED IVF-PQ index: one cell-bucketed parquet table of
-    * (nn_id, cell, codes, norm) — ~16 B per vector at m=8 instead of the
-    * 256 B raw vector, the layout that keeps a 100 TB corpus''s index
-    * resident — plus the codebooks table. Same one-sample codebook fits
-    * as [[ivfPqTopK]]; returns (centers, books) for immediate use. */
+  /** Persist an IVF-PQ index — (nn_id, cell, codes, norm), no raw vectors
+    * — plus its codebooks table; returns (centers, books). */
   def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       table: String, nlist: Int = 16, m: Int = 8, ksub: Int = 256,
       seed: Long = 42L, maxIter: Int = 5, trainFraction: Double = 0.1)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val c = corpus.select(col(idCol).as("nn_id"),
-      col(vecCol).cast("array<double>").as("cv"))
-    val sampleOpt = collectSample(c.select(col("cv")),
-      math.max(nlist, ksub).toLong * 10, seed, trainFraction)
-    val centers = sampleOpt match {
-      case Some(s) => localKMeans(s, nlist, maxIter, seed)
-      case None => fitCenters(c, nlist, seed, maxIter, trainFraction)
-    }
-    val books = sampleOpt match {
-      case Some(s) => pqTrainLocal(s, m, ksub, seed, maxIter)
-      case None => pqTrain(corpus, vecCol, m, ksub, seed, maxIter, trainFraction)
-    }
-    writePqRows(c, centers, books, table, "overwrite")
-    saveCodebooks(c.sparkSession, table, centers, books)
+    val c = vectors(corpus, idCol, vecCol)
+    val (centers, books) = fitPq(c, nlist, m, ksub, seed, maxIter, trainFraction)
+    writeCells(c, centers, pqCodes(books), table, "overwrite")
+    saveCodebooks(c.sparkSession, s"${table}_codebooks", centers, books)
     (centers, books)
   }
 
-  /** Fold NEW vectors into a persisted IVF-PQ index without refitting —
-    * encode with the existing codebooks, append to the bucketed table
-    * (mirrors [[appendToIvfIndex]]; cost proportional to the increment,
-    * codes survive because PQ quantizes raw vectors, not residuals). */
+  /** Append new vectors to a persisted IVF-PQ index under its codebooks. */
   def appendToIvfPqIndex(table: String, centers: Array[Array[Double]],
       books: Array[Array[Array[Double]]], newVecs: DataFrame,
-      idCol: String, vecCol: String): Unit =
-    writePqRows(newVecs.select(col(idCol).as("nn_id"),
-      col(vecCol).cast("array<double>").as("cv")), centers, books, table, "append")
+      idCol: String, vecCol: String): Unit = {
+    graft.text.Bm25.repairSwap(newVecs.sparkSession, pqTables(table))
+    writeCells(vectors(newVecs, idCol, vecCol), centers, pqCodes(books), table, "append")
+  }
 
-  /** Rebalance a persisted IVF-PQ index whose appended increments drifted
-    * the cell populations — the PQ counterpart of [[rebalanceIvfIndex]],
-    * thresholded on the same [[ivfCellSkew]] probe. The index deliberately
-    * holds no raw vectors, so the reassignment reads `source` (the
-    * raw-vector source of truth — the same contract as ivfPqTopKIndexed's
-    * `rerankFrom`): refit the COARSE codebook from a bounded deterministic
-    * sample of the source, KEEP the PQ codebooks (`books` — PQ quantizes
-    * raw vectors, not cell residuals, so codes are invariant under a
-    * coarse re-clustering), and rewrite the cell-bucketed layout in ONE
-    * scan stage over the source into a fresh table swapped in under the
-    * old name. Re-encoding rides the scan the reassignment needs anyway
-    * and avoids shuffling the old 20M-row codes table into a join; the
-    * persisted codebooks table is refreshed so [[loadPqCodebooks]] stays
-    * consistent with the swapped index. In-place overwrite of the
-    * lazily-scanned source table would be data loss (the Layout.compact
-    * rule); the DROP+RENAME swap is the only non-atomic step. Returns the
-    * NEW coarse codebook — queries keep answering on the old one until
-    * handed the return value. */
-  def rebalanceIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+  /** Refit the coarse codebook of a persisted IVF-PQ index from `source`
+    * (the raw vectors the index does not hold), KEEP the PQ `books`, and
+    * rewrite + swap the codes and codebooks tables as one set; returns
+    * the NEW coarse codebook. */
+  def rebalanceIvfPqIndex(spark: SparkSession,
       table: String, books: Array[Array[Array[Double]]], source: DataFrame,
       idCol: String, vecCol: String, nlist: Int = 16, seed: Long = 42L,
-      maxIter: Int = 5, trainFraction: Double = 0.1): Array[Array[Double]] = {
-    val c = source.select(col(idCol).as("nn_id"),
-      col(vecCol).cast("array<double>").as("cv"))
-    val centers = collectSample(c.select(col("cv")), nlist.toLong * 10, seed,
-        trainFraction) match {
-      case Some(s) => localKMeans(s, nlist, maxIter, seed)
-      case None => fitCenters(c, nlist, seed, maxIter, trainFraction)
-    }
-    val tmp = table + "_rebalanced_tmp"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    writePqRows(c, centers, books, tmp, "overwrite")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    saveCodebooks(spark, table, centers, books)
+      maxIter: Int = 5, trainFraction: Double = 0.1): Array[Array[Double]] =
+    rewriteAndSwap(spark, table, Some(books), vectors(source, idCol, vecCol),
+      nlist, seed, maxIter, trainFraction)
+
+  /** The shared rebalance: repair, refit the coarse codebook from `c`
+    * (nn_id, cv) — read only after the repair — write `_tmp` tables, swap. */
+  private def rewriteAndSwap(spark: SparkSession, table: String,
+      books: Option[Books], c: => DataFrame, nlist: Int, seed: Long,
+      maxIter: Int, fraction: Double): Array[Array[Double]] = {
+    val tables = if (books.isDefined) pqTables(table) else Seq(table)
+    graft.text.Bm25.repairSwap(spark, tables)
+    val vecs = c
+    val centers = fitCenters(vecs, nlist, seed, maxIter, fraction)
+    tables.foreach(t => graft.text.Bm25.dropIndexTable(spark, s"${t}_tmp"))
+    writeCells(vecs, centers, books.fold(RawVectors)(pqCodes), s"${table}_tmp", "overwrite")
+    books.foreach(saveCodebooks(spark, s"${table}_codebooks_tmp", centers, _))
+    graft.text.Bm25.swapTables(spark, tables)
     centers
   }
 
-  /** Query a persisted IVF-PQ index: probed cells resolve to bucket-file
-    * seeks (graft.api.Lookup — only nprobe of the nlist files are read),
-    * ADC scores the resident codes, and `rerank > 0` re-scores the
-    * shortlist exactly against `rerankFrom` (the raw-vector source of
-    * truth, which the index itself deliberately does not hold). */
-  def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
+  /** Query a persisted IVF-PQ index through bucket-file seeks; `rerank >
+    * 0` re-scores the shortlist exactly against `rerankFrom`, the
+    * raw-vector source the index does not hold. */
+  def ivfPqTopKIndexed(spark: SparkSession, table: String,
       centers: Array[Array[Double]], books: Array[Array[Array[Double]]],
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int = 4, rerank: Int = 0,
-      rerankFrom: Option[DataFrame] = None): DataFrame = {
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val probeCells = udf { (v: Seq[Double]) =>
-      centers.zipWithIndex.map { case (ctr, i) =>
-        var s = 0.0; var j = 0
-        while (j < ctr.length) { val d = ctr(j) - v(j); s += d * d; j += 1 }
-        (s, i)
-      }.sortBy(_._1).take(nprobe).map(_._2)
-    }
-    val lut = udf { (qv: Seq[Double]) =>
-      val t = new Array[Double](m * ksub)
-      var j = 0
-      while (j < m) {
-        val cb = books(j); var c2 = 0
-        while (c2 < cb.length) {
-          var s = 0.0; var d = 0
-          while (d < dsub) { s += qv(j * dsub + d) * cb(c2)(d); d += 1 }
-          t(j * ksub + c2) = s; c2 += 1
-        }
-        j += 1
-      }
-      t
-    }
-    val q = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("lut", lut(col("qv")))
-      .withColumn("qnorm", sqrt(aggregate(col("qv"), lit(0.0), (acc, x) => acc + x * x)))
-      .withColumn("qcell", explode(probeCells(col("qv"))))
-    val scored = graft.api.Lookup.lookupJoin(spark, q, table, "qcell", "cell")
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("sim", round(pqAdc(col("codes"), col("lut")) /
-        (col("qnorm") * col("norm")), 4))
-      .select("query_id", "nn_id", "sim")
-    if (rerank <= 0) rankTopK(scored, k)
-    else {
-      val src = rerankFrom.getOrElse(throw new IllegalArgumentException(
-        "rerank > 0 needs rerankFrom — the raw-vector source the index does not hold"))
-      val shortlist = rankTopK(scored, rerank).select("query_id", "nn_id")
-      val cvs = src.select(col(idCol).as("nn_id"),
-        col(vecCol).cast("array<double>").as("cv"))
-      val qv = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      val exact = cvs.join(broadcast(shortlist), Seq("nn_id"))
-        .join(broadcast(qv), Seq("query_id"))
-        .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-        .select("query_id", "nn_id", "sim")
-      rankTopK(exact, k)
-    }
-  }
+      rerankFrom: Option[DataFrame] = None): DataFrame =
+    rerankTopK(cellScores(Right((spark, table)), centers, pqCodes(books), queries,
+        idCol, vecCol, nprobe),
+      vectors(rerankFrom.getOrElse(throw new IllegalArgumentException(
+        "rerank > 0 needs rerankFrom — the raw-vector source the index does not hold")),
+        idCol, vecCol),
+      queries, idCol, vecCol, k, rerank)
 }

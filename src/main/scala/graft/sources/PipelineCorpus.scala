@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   */
 object PipelineCorpus {
 
-  private val base = "/root/repo/target/pipeline/v1"
+  // under the working directory: each checkout reads its own generated data
+  private val base = new File("target/pipeline/v1").getAbsolutePath
   def dirFor(s: Int): String = if (s == 1) base else s"$base-x$s"
 
   def docsFor(s: Int): Long = 100000L * s

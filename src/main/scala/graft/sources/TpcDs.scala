@@ -32,7 +32,8 @@ object TpcDs {
     * Each scale generates into its own versioned directory. */
   val scale: Int = sys.env.getOrElse("SPARK_GRAFT_TPCDS_SCALE", "1").toInt
 
-  private val base = "/root/repo/target/tpcds/v21"
+  // under the working directory: each checkout reads its own generated data
+  private val base = new File("target/tpcds/v21").getAbsolutePath
   def dirFor(s: Int): String = if (s == 1) base else s"$base-x$s"
   val dir: String = dirFor(scale)
 

@@ -223,20 +223,36 @@ object Bm25 {
     } catch { case _: Throwable => }
   }
 
-  /** Atomically-enough replace `target` with `tmp` via rename-aside:
-    * target → target_old, tmp → target, drop target_old. A crash between
-    * any two steps leaves a COMPLETE table recoverable by rename (the
-    * pre-swap stats/meta live on as `_old` until the new table is in
-    * place) — never the no-stats-at-all window a drop-then-rename swap
-    * has. [[appendToIndex]] repairs a half-completed swap on entry. */
-  private def swapInto(spark: org.apache.spark.sql.SparkSession,
-      tmp: String, target: String): Unit = {
-    val old = s"${target}_old"
-    dropIndexTable(spark, old) // stranded by a crash after a prior swap
-    if (spark.catalog.tableExists(target))
-      spark.sql(s"ALTER TABLE $target RENAME TO $old")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $target")
-    dropIndexTable(spark, old)
+  /** Replace every live table `t` of `targets` with its freshly written
+    * `t_tmp`, as ONE set, by rename-aside: each live `t` → `t_old`, then
+    * each `t_tmp` → `t`, then each `t_old` dropped. A crash between any
+    * two steps leaves complete tables on disk — never the no-table window
+    * of a drop-then-rename swap — and [[repairSwap]] turns them into the
+    * whole pre-swap or the whole post-swap set. */
+  private[graft] def swapTables(spark: org.apache.spark.sql.SparkSession,
+      targets: Seq[String]): Unit = {
+    targets.foreach(t => dropIndexTable(spark, s"${t}_old")) // stale location
+    targets.filter(spark.catalog.tableExists)
+      .foreach(t => spark.sql(s"ALTER TABLE $t RENAME TO ${t}_old"))
+    targets.foreach(t => spark.sql(s"ALTER TABLE ${t}_tmp RENAME TO $t"))
+    targets.foreach(t => dropIndexTable(spark, s"${t}_old"))
+  }
+
+  /** Finish or undo a [[swapTables]] a crash interrupted. When every live
+    * table exists, the swap never started renaming or got past its last
+    * rename-in: drop the stranded `_old` tables (the post-state). Otherwise
+    * rename each `_old` back over its missing or new live table (the
+    * pre-state). Leftover `_tmp` tables are dropped either way. */
+  private[graft] def repairSwap(spark: org.apache.spark.sql.SparkSession,
+      targets: Seq[String]): Unit = {
+    def exists(t: String) = spark.catalog.tableExists(t)
+    if (!targets.forall(exists))
+      targets.filter(t => exists(s"${t}_old")).foreach { t =>
+        if (exists(t)) dropIndexTable(spark, t)
+        spark.sql(s"ALTER TABLE ${t}_old RENAME TO $t")
+      }
+    for (t <- targets; x <- Seq(s"${t}_old", s"${t}_tmp") if exists(x))
+      dropIndexTable(spark, x)
   }
 
   /** Build the persisted index. `buckets` fixes the term-bucket count for
@@ -289,20 +305,18 @@ object Bm25 {
     * an id double-counts its df, the [[graft.dedup.Dedup.appendToBandIndex]]
     * contract.
     *
-    * Crash safety: the stats and meta replacements go through
-    * [[swapInto]]'s rename-aside (target → `_old`, tmp → target, drop
-    * `_old`), so a failure between any two steps leaves a complete table
-    * on disk — either the live one or its `_old` — and THIS method
-    * repairs a half-finished swap on entry (rename `_old` back when the
-    * live table is missing). The one non-idempotent step remains the
+    * Crash safety: the stats and meta replacements each go through
+    * [[swapTables]]' rename-aside, so a failure between any two steps
+    * leaves a complete table on disk — either the live one or its `_old`
+    * — and THIS method repairs a half-finished swap on entry
+    * ([[repairSwap]]). The one non-idempotent step remains the
     * postings append itself: a retry AFTER postings committed but before
     * the stats swap would re-append the increment — recover with
     * [[repairStatsFromPostings]] (do NOT retry the append), which
     * recomputes stats/meta from whatever the postings table now holds. */
   def appendToIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       docsInc: DataFrame, idCol: String, textCol: String): Unit = {
-    repairHalfSwap(spark, s"${table}_stats")
-    repairHalfSwap(spark, s"${table}_meta")
+    Seq("_stats", "_meta").foreach(t => repairSwap(spark, Seq(table + t)))
     val meta = spark.table(s"${table}_meta").head()
     val buckets = meta.getAs[Int]("buckets")
     val p = postings(docsInc, idCol, textCol)
@@ -317,7 +331,7 @@ object Bm25 {
     merged.repartition(col("term"))
       .write.mode("overwrite").bucketBy(buckets, "term").sortBy("term")
       .format("parquet").saveAsTable(tmp)
-    swapInto(spark, tmp, s"${table}_stats")
+    swapTables(spark, Seq(s"${table}_stats"))
     val inc = docsInc.select(tokens(col(textCol)).as("tk"))
       .agg(count(lit(1)).as("n"),
         coalesce(sum(size(col("tk")).cast("double")), lit(0.0)).as("s")).head()
@@ -326,20 +340,8 @@ object Bm25 {
     writeMeta((meta.getAs[Long]("n_docs") + inc.getLong(0),
       meta.getAs[Double]("sum_dl") + inc.getDouble(1)),
       spark, metaTmp, buckets)
-    swapInto(spark, metaTmp, s"${table}_meta")
+    swapTables(spark, Seq(s"${table}_meta"))
   }
-
-  /** Rename a half-swapped `_old` back when a crash stranded it as the
-    * only complete copy — the recovery step of [[swapInto]]'s rename-aside
-    * discipline, shared by [[appendToIndex]] and
-    * [[repairStatsFromPostings]]. */
-  private def repairHalfSwap(spark: org.apache.spark.sql.SparkSession,
-      target: String): Unit =
-    try {
-      if (!spark.catalog.tableExists(target) &&
-          spark.catalog.tableExists(s"${target}_old"))
-        spark.sql(s"ALTER TABLE ${target}_old RENAME TO $target")
-    } catch { case _: Throwable => }
 
   /** Rebuild the `_stats` and `_meta` tables FROM the postings table —
     * the recovery for [[appendToIndex]]'s one non-idempotent window (a
@@ -355,13 +357,12 @@ object Bm25 {
     * Cost is O(postings) — a maintenance scan of the index itself, never
     * of the corpus; bucket count is read from the surviving meta row when
     * there is one, else from the postings table's own bucket spec, and
-    * the replacement rides the same [[swapInto]] rename-aside as every
+    * the replacement rides the same [[swapTables]] rename-aside as every
     * other stats/meta write (this method is itself crash-safe and
     * idempotent — safe to re-run). */
   def repairStatsFromPostings(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    repairHalfSwap(spark, s"${table}_stats")
-    repairHalfSwap(spark, s"${table}_meta")
+    Seq("_stats", "_meta").foreach(t => repairSwap(spark, Seq(table + t)))
     val buckets: Int =
       (try Some(spark.table(s"${table}_meta").head().getAs[Int]("buckets"))
        catch { case _: Throwable => None })
@@ -376,14 +377,14 @@ object Bm25 {
       .repartition(col("term"))
       .write.mode("overwrite").bucketBy(buckets, "term").sortBy("term")
       .format("parquet").saveAsTable(tmp)
-    swapInto(spark, tmp, s"${table}_stats")
+    swapTables(spark, Seq(s"${table}_stats"))
     val agg = p.groupBy("doc_id").agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0.0)).as("s")).head()
     val metaTmp = s"${table}_meta_tmp"
     dropIndexTable(spark, metaTmp)
     writeMeta((agg.getLong(0), agg.getDouble(1)), spark, metaTmp, buckets)
-    swapInto(spark, metaTmp, s"${table}_meta")
+    swapTables(spark, Seq(s"${table}_meta"))
   }
 
   /** Top-k BM25 from the persisted index: idf resolves through stats

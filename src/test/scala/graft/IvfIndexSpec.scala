@@ -103,7 +103,7 @@ class IvfIndexSpec extends GraftSpec {
         exact.orderBy("query_id", "rnk").collect().map(_.toString).toSeq)
     } finally {
       spark.sql("DROP TABLE IF EXISTS ivf_rebal")
-      spark.sql("DROP TABLE IF EXISTS ivf_rebal_rebalanced_tmp")
+      spark.sql("DROP TABLE IF EXISTS ivf_rebal_tmp")
     }
   }
 
@@ -126,6 +126,19 @@ class IvfIndexSpec extends GraftSpec {
       val brute = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
       assert(got.orderBy("query_id", "rnk").collect().map(_.toString).toSeq ==
         brute.orderBy("query_id", "rnk").collect().map(_.toString).toSeq)
+      // the persisted path equals the in-job path at a partial probe, with
+      // and without exact rerank: both fit from the same
+      // max(nlist, ksub)*10 sample, so codebooks, cells and codes agree
+      for (rr <- Seq(0, 50)) {
+        val indexed = Similarity.ivfPqTopKIndexed(spark, "pq_idx", c2, b2,
+          queries, "vec_id", "embedding", k = 5, nprobe = 3, rerank = rr,
+          rerankFrom = Some(emb))
+        val direct = Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
+          k = 5, nlist = 8, nprobe = 3, m = 8, ksub = 16, rerank = rr)
+        assert(indexed.orderBy("query_id", "rnk").collect().map(_.toString).toSeq ==
+          direct.orderBy("query_id", "rnk").collect().map(_.toString).toSeq,
+          s"rerank = $rr")
+      }
 
       // append maintenance: encode new vectors with the SAME codebooks,
       // append to the bucketed table; the appended ids must be seekable
@@ -177,9 +190,119 @@ class IvfIndexSpec extends GraftSpec {
         brute.orderBy("query_id", "rnk").collect().map(_.toString).toSeq)
     } finally {
       spark.sql("DROP TABLE IF EXISTS pq_rebal")
-      spark.sql("DROP TABLE IF EXISTS pq_rebal_rebalanced_tmp")
+      spark.sql("DROP TABLE IF EXISTS pq_rebal_tmp")
       spark.sql("DROP TABLE IF EXISTS pq_rebal_codebooks")
     }
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.orderBy("query_id", "rnk").collect().map(_.toString).toSeq
+
+  private def cells(table: String): Set[String] =
+    spark.table(table).filter(col("nn_id") < 100000L).select("nn_id", "cell")
+      .collect().map(_.toString).toSet
+
+  private def sameCells(table: String, want: Set[String], state: Int): Unit = {
+    val got = cells(table)
+    assert(got.size == want.size && (got diff want).isEmpty,
+      s"state $state: ${(got diff want).size} of ${got.size} rows in other cells")
+  }
+
+  /** Every step boundary of a rebalance swap of `targets`, reproduced by
+    * hand from golden pre-state tables `pre(t)` and post-state tables
+    * `post(t)`: state k applies the swap's first k steps in its order —
+    * write each `_tmp`, rename each live table aside to `_old`, rename
+    * each `_tmp` in, drop each `_old` — then runs `check(k, expectPost)`
+    * and asserts that no `_old` or `_tmp` table survived it. The repair
+    * rule makes the states up to the last rename-in the pre-state. */
+  private def eachSwapState(targets: Seq[String], pre: String => String,
+      post: String => String)(check: (Int, Boolean) => Unit): Unit = {
+    def copy(from: String, to: String): Unit = {
+      val df = spark.table(from)
+      (if (df.columns.contains("cell"))
+        df.repartition(col("cell")).write.bucketBy(8, "cell").sortBy("cell")
+      else df.coalesce(1).write).format("parquet").saveAsTable(to)
+    }
+    def sql(q: String): Unit = spark.sql(q)
+    val steps: Seq[() => Unit] =
+      targets.map(t => () => copy(post(t), s"${t}_tmp")) ++
+      targets.map(t => () => sql(s"ALTER TABLE $t RENAME TO ${t}_old")) ++
+      targets.map(t => () => sql(s"ALTER TABLE ${t}_tmp RENAME TO $t")) ++
+      targets.map(t => () => sql(s"DROP TABLE ${t}_old"))
+    for (k <- 0 to steps.length) {
+      for (t <- targets; x <- Seq(t, s"${t}_tmp", s"${t}_old"))
+        graft.text.Bm25.dropIndexTable(spark, x)
+      targets.foreach(t => copy(pre(t), t))
+      steps.take(k).foreach(_())
+      check(k, k >= 3 * targets.length)
+      for (t <- targets; x <- Seq(s"${t}_tmp", s"${t}_old"))
+        assert(!spark.catalog.tableExists(x), s"state $k left $x behind")
+    }
+  }
+
+  private def dropSwapTables(names: Seq[String]): Unit =
+    for (t <- names; x <- Seq(t, s"${t}_tmp", s"${t}_old"))
+      graft.text.Bm25.dropIndexTable(spark, x)
+
+  test("IVF-PQ rebalance crash: loadPqCodebooks repairs every swap state to the whole pre- or post-state") {
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 5)
+    val tables = Seq("pqcr", "pqcr_g", "pqcr_h").flatMap(t => Seq(t, s"${t}_codebooks"))
+    try {
+      // golden pre-state (g) and post-state (h: the same build, rebalanced
+      // with another seed, so its coarse codebook and cells differ)
+      val (c0, books) = Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
+        "pqcr_g", nlist = 8, m = 8, ksub = 16)
+      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", "pqcr_h",
+        nlist = 8, m = 8, ksub = 16)
+      val c1 = Similarity.rebalanceIvfPqIndex(spark, "pqcr_h", books, emb,
+        "vec_id", "embedding", nlist = 8, seed = 43L)
+      assert(c0.map(_.toSeq).toSeq != c1.map(_.toSeq).toSeq)
+      // loadPqCodebooks, then a full-probe query with exact rerank
+      def answer(t: String) = {
+        val (c, b) = Similarity.loadPqCodebooks(spark, t)
+        (c, b, rows(Similarity.ivfPqTopKIndexed(spark, t, c, b, queries, "vec_id",
+          "embedding", k = 5, nprobe = 8, rerank = 4000, rerankFrom = Some(emb))))
+      }
+      val (preAnswer, postAnswer) = (answer("pqcr_g")._3, answer("pqcr_h")._3)
+      val (preCells, postCells) = (cells("pqcr_g"), cells("pqcr_h"))
+      eachSwapState(Seq("pqcr", "pqcr_codebooks"), t => t.replace("pqcr", "pqcr_g"),
+          t => t.replace("pqcr", "pqcr_h")) { (k, post) =>
+        val (c, b, got) = answer("pqcr") // loadPqCodebooks repairs on entry
+        assert(got == preAnswer || got == postAnswer, s"state $k")
+        // the coarse codebook always pairs with the cells it routed
+        assert(c.map(_.toSeq).toSeq == (if (post) c1 else c0).map(_.toSeq).toSeq,
+          s"state $k")
+        sameCells("pqcr", if (post) postCells else preCells, k)
+        assert(b.map(_.map(_.toSeq).toSeq).toSeq == books.map(_.map(_.toSeq).toSeq).toSeq)
+      }
+    } finally dropSwapTables(tables)
+  }
+
+  test("IVF rebalance crash: append repairs every swap state to the whole pre- or post-state") {
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 5)
+    val inc = queries.select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+    try {
+      val c0 = Similarity.buildIvfIndex(emb, "vec_id", "embedding", "ivfcr_g", nlist = 8)
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", "ivfcr_h", nlist = 8)
+      val c1 = Similarity.rebalanceIvfIndex(spark, "ivfcr_h", nlist = 8, seed = 43L)
+      assert(c0.map(_.toSeq).toSeq != c1.map(_.toSeq).toSeq)
+      val (preCells, postCells) = (cells("ivfcr_g"), cells("ivfcr_h"))
+      // under a full probe both the pre- and the post-state answer equal
+      // brute force over everything the index holds
+      val exact = rows(Similarity.bruteForceTopK(
+        emb.select("vec_id", "embedding").unionByName(inc), queries,
+        "vec_id", "embedding", k = 5))
+      val n = emb.count() + inc.count()
+      eachSwapState(Seq("ivfcr"), _ => "ivfcr_g", _ => "ivfcr_h") { (k, post) =>
+        Similarity.appendToIvfIndex("ivfcr", c0, inc, "vec_id", "embedding")
+        assert(spark.table("ivfcr").count() == n, s"state $k")
+        assert(rows(Similarity.ivfTopKIndexed(spark, "ivfcr", c0, queries,
+          "vec_id", "embedding", k = 5, nprobe = 8)) == exact, s"state $k")
+        sameCells("ivfcr", if (post) postCells else preCells, k)
+      }
+    } finally dropSwapTables(Seq("ivfcr", "ivfcr_g", "ivfcr_h"))
   }
 
   test("rankTopK large-k window path ranks identically to the heap path") {
