@@ -2,9 +2,12 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.streaming.DiscardSink
 
 /** Nexmark under Structured Streaming micro-batch execution — the
   * streaming claim, benched rather than asserted. Events arrive through
@@ -45,14 +48,26 @@ import org.apache.spark.sql.streaming.Trigger
   * in NexmarkStreamingSpec — the batch-only divergence list is empty.
   *
   * Micro-batch cost is mostly fixed per trigger, not per row (the
-  * Structured Streaming paper's price of micro-batch execution): at 1,000
-  * rows per batch, `addBatch` dominated and a quarter of it was Janino
-  * compiling expression classes that no cache reuses across queries, or
-  * that a new watermark literal made new. `run` therefore evaluates
-  * expressions interpreted when a micro-batch holds at most
-  * [[InterpretedMaxBatchRows]] rows and keeps generated code above that,
-  * where per-row evaluation outweighs compilation; [[withRunConf]] holds
-  * the rule and every other session setting `run` makes.
+  * Structured Streaming paper's price of micro-batch execution), so `run`
+  * trims what every trigger pays:
+  *  - expressions evaluate interpreted when a micro-batch holds at most
+  *    [[InterpretedMaxBatchRows]] rows: at that size the Janino compiles
+  *    of expression classes, which no cache reuses across queries and
+  *    which each new watermark literal makes new, cost more than they
+  *    save; above it, where per-row evaluation outweighs compilation,
+  *    generated code stays. [[withRunConf]] holds this rule and every
+  *    other session setting `run` makes;
+  *  - the queries with a [[plan]] drain into
+  *    [[graft.streaming.DiscardSink]], a V1 sink, rather than the built-in
+  *    `noop` sink. On Spark 4.1.2 each SQL execution calls
+  *    `QueryExecution.explainString` as it starts, and for a streaming plan
+  *    that builds a fresh `IncrementalExecution`, i.e. plans the batch
+  *    again. `noop` is a V2 sink, which `MicroBatchExecution` runs as a
+  *    `collect()` inside the execution it opened for the batch, so each
+  *    micro-batch was planned three times: once in `queryPlanning` and
+  *    once per execution. The V1 sink runs inside the batch's execution,
+  *    and the batch is planned twice. The remaining re-plan has no switch
+  *    in Spark 4.1.2 (`spark.sql.ui.explainMode` only picks its format).
   */
 object NexmarkStreaming {
 
@@ -66,58 +81,61 @@ object NexmarkStreaming {
   private def bidsW(ev: DataFrame): DataFrame =
     Nexmark.bidsFrom(ev).withWatermark("ts", "10 seconds")
 
-  /** Streaming plan per query over a (possibly unbounded) event frame. */
-  def plans(ev: DataFrame): Map[String, DataFrame] = {
-    val b = bidsW(ev)
-    val q5counts = b
+  /** The streaming plan of query `name` over a (possibly unbounded) event
+    * frame, or None for the queries without one: q4/q6/q9 run as
+    * [[twoStage]], and q10 writes its own sink in [[run]]. Only the named
+    * plan is built; every DataFrame step is analyzed as it is made. */
+  def plan(ev: DataFrame, name: String): Option[DataFrame] = PartialFunction.condOpt(name) {
+    case "q0" => Nexmark.bidsFrom(ev)
+    case "q1" => Nexmark.bidsFrom(ev).select(col("auction"), col("bidder"),
+      (col("price") * 0.908).as("price_eur"), col("ts"))
+    case "q2" => Nexmark.bidsFrom(ev).filter(col("auction") % 123 === 0)
+      .select(col("auction"), col("price"))
+    case "q3" => Nexmark.auctionsFrom(ev).filter(col("category") === 1)
+      .join(Nexmark.personsFrom(ev).withColumnRenamed("ts", "p_ts")
+          .filter(col("state").isin("OR", "ID", "CA")),
+        col("seller") === col("p_id"))
+      .select(col("name"), col("city"), col("state"), col("a_id"))
+    case "q5" => bidsW(ev)
       .groupBy(window(col("ts"), "10 seconds", "2 seconds"), col("auction"))
       .agg(count(lit(1)).as("n_bids"))
-    Map(
-      "q0" -> Nexmark.bidsFrom(ev),
-      "q1" -> Nexmark.bidsFrom(ev).select(col("auction"), col("bidder"),
-        (col("price") * 0.908).as("price_eur"), col("ts")),
-      "q2" -> Nexmark.bidsFrom(ev).filter(col("auction") % 123 === 0)
-        .select(col("auction"), col("price")),
-      "q3" -> Nexmark.auctionsFrom(ev).filter(col("category") === 1)
-        .join(Nexmark.personsFrom(ev).withColumnRenamed("ts", "p_ts")
-            .filter(col("state").isin("OR", "ID", "CA")),
-          col("seller") === col("p_id"))
-        .select(col("name"), col("city"), col("state"), col("a_id")),
-      "q5" -> q5counts
-        .groupBy(col("window"))
-        .agg(max_by(col("auction"), struct(col("n_bids"), -col("auction"))).as("auction"),
-          max(col("n_bids")).as("n_bids"))
-        .select(col("window.start").as("win_start"), col("auction"), col("n_bids")),
-      "q7" -> b
-        .groupBy(window(col("ts"), "10 seconds"))
-        .agg(max(col("price")).as("price"),
-          max_by(col("auction"), col("price")).as("auction"),
-          max_by(col("bidder"), col("price")).as("bidder"))
-        .select(col("window.start").as("win_start"), col("auction"),
-          col("bidder"), col("price")),
-      "q8" -> {
-        val p = Nexmark.personsFrom(ev).withWatermark("ts", "10 seconds")
-          .withColumn("win", window(col("ts"), "10 seconds"))
-          .select(col("p_id"), col("name"), col("win"), col("ts"))
-        val a = Nexmark.auctionsFrom(ev).withColumnRenamed("ts", "a_ts")
-          .withWatermark("a_ts", "10 seconds")
-          .withColumn("a_win", window(col("a_ts"), "10 seconds"))
-          .select(col("seller"), col("a_win"))
-        p.join(a, col("p_id") === col("seller") && col("win") === col("a_win"))
-          .select(col("p_id"), col("name"), col("win.start").as("win_start"))
-      },
-      "q11" -> b
-        .groupBy(session_window(col("ts"), "10 seconds"), col("bidder"))
-        .agg(count(lit(1)).as("n_bids"))
-        .select(col("session_window.start").as("sess_start"),
-          col("bidder"), col("n_bids")),
-      "q12" -> Nexmark.bidsFrom(ev)
-        .withColumn("proc", current_timestamp())
-        .withWatermark("proc", "1 second")
-        .groupBy(window(col("proc"), "1 second"), col("bidder"))
-        .agg(count(lit(1)).as("n_bids"))
-        .select(col("window.start").as("win_start"), col("bidder"), col("n_bids")))
+      .groupBy(col("window"))
+      .agg(max_by(col("auction"), struct(col("n_bids"), -col("auction"))).as("auction"),
+        max(col("n_bids")).as("n_bids"))
+      .select(col("window.start").as("win_start"), col("auction"), col("n_bids"))
+    case "q7" => bidsW(ev)
+      .groupBy(window(col("ts"), "10 seconds"))
+      .agg(max(col("price")).as("price"),
+        max_by(col("auction"), col("price")).as("auction"),
+        max_by(col("bidder"), col("price")).as("bidder"))
+      .select(col("window.start").as("win_start"), col("auction"),
+        col("bidder"), col("price"))
+    case "q8" =>
+      val p = Nexmark.personsFrom(ev).withWatermark("ts", "10 seconds")
+        .withColumn("win", window(col("ts"), "10 seconds"))
+        .select(col("p_id"), col("name"), col("win"), col("ts"))
+      val a = Nexmark.auctionsFrom(ev).withColumnRenamed("ts", "a_ts")
+        .withWatermark("a_ts", "10 seconds")
+        .withColumn("a_win", window(col("a_ts"), "10 seconds"))
+        .select(col("seller"), col("a_win"))
+      p.join(a, col("p_id") === col("seller") && col("win") === col("a_win"))
+        .select(col("p_id"), col("name"), col("win.start").as("win_start"))
+    case "q11" => bidsW(ev)
+      .groupBy(session_window(col("ts"), "10 seconds"), col("bidder"))
+      .agg(count(lit(1)).as("n_bids"))
+      .select(col("session_window.start").as("sess_start"),
+        col("bidder"), col("n_bids"))
+    case "q12" => Nexmark.bidsFrom(ev)
+      .withColumn("proc", current_timestamp())
+      .withWatermark("proc", "1 second")
+      .groupBy(window(col("proc"), "1 second"), col("bidder"))
+      .agg(count(lit(1)).as("n_bids"))
+      .select(col("window.start").as("win_start"), col("bidder"), col("n_bids"))
   }
+
+  /** Every query's [[plan]] over one event frame. */
+  def plans(ev: DataFrame): Map[String, DataFrame] =
+    queryNames.flatMap(name => plan(ev, name).map(name -> _)).toMap
 
   val queryNames: Seq[String] =
     Seq("q0", "q1", "q2", "q3", "q4", "q5", "q6", "q7", "q8", "q9", "q10", "q11", "q12")
@@ -246,8 +264,7 @@ object NexmarkStreaming {
     *    watermarks compile no class). */
   private[graft] def withRunConf[T](spark: SparkSession, n: Long, batchRows: Long)(
       body: => T): T = {
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toLong)
-      .getOrElse(math.max(2, math.min(16, n / 50000)))
+    val parts = math.max(2, math.min(16, n / 50000))
     val set = Seq(
       "spark.sql.shuffle.partitions" -> parts.toString,
       "spark.sql.streaming.checkpointFileManagerClass" ->
@@ -266,28 +283,32 @@ object NexmarkStreaming {
 
   /** Run one query to completion under Trigger.AvailableNow; returns
     * events/sec, or None if this query isn't streaming-expressible or the
-    * engine rejects the plan.
+    * engine rejects the plan. Builds only the named query's plan, and
+    * deletes the query's checkpoint directory once the query has stopped.
     *
     * A micro-batch's cost is mostly fixed, not per row. Traced at 1,000
-    * rows per batch on 4 cores (70 micro-batches of the 13 queries):
-    * `addBatch` 168 ms a batch with generated expressions, 129 ms
-    * interpreted (the Janino compiles [[withRunConf]] removes), query
-    * planning 42 ms, and ≤ 2 ms each for the WAL, offset and state
-    * commits. So the default is two data micro-batches (plus the
-    * watermark-flush no-data batch); latency-sensitive callers size
+    * rows per batch on 4 cores (70 micro-batches of the 13 queries),
+    * `addBatch` takes 112 ms a batch (137 ms through the `noop` sink) and
+    * query planning 43 ms; the WAL, offset and state commits take ≤ 2 ms
+    * each. Inside `addBatch`, in the median data micro-batch of one q5 run
+    * (plans/r16): the execution's explain re-plan 35 ms, building the RDDs
+    * and submitting the job 88 ms, the job 161 ms; for q3, a stream-stream
+    * join, 149, 10 and 103 ms. The `noop` sink added a second re-plan
+    * (q5 31 ms, q3 114 ms). So the default is two data micro-batches (plus
+    * the watermark-flush no-data batch); latency-sensitive callers size
     * `rowsPerBatch` down, the knob being Spark's
     * maxOffsetsPerTrigger-style admission control. */
   def run(spark: SparkSession, name: String, n: Long,
       rowsPerBatch: Long = 0L, timeoutMs: Long = 300000L): Option[Double] = {
     val batchRows = if (rowsPerBatch > 0) rowsPerBatch else math.max(1L, n / 2)
-    val ckpt = Files.createTempDirectory(s"graft-nexmark-stream-$name").toString
-    withRunConf(spark, n, batchRows) {
+    val ckpt = Files.createTempDirectory(s"graft-nexmark-stream-$name").toFile
+    try withRunConf(spark, n, batchRows) {
       val ev = stream(spark, n, batchRows)
       try {
         val t0 = System.nanoTime()
         val finished =
           if (name == "q4" || name == "q6" || name == "q9")
-            twoStage(spark, name, ev, ckpt, timeoutMs).exists { out =>
+            twoStage(spark, name, ev, ckpt.toString, timeoutMs).exists { out =>
               out.write.format("noop").mode("overwrite").save() // final agg is part of the cost
               true
             }
@@ -302,9 +323,9 @@ object NexmarkStreaming {
                   date_format(col("win.start"), "HH-mm").as("hhmm"))
               Some(out.writeStream.format("parquet").option("path", outPath)
                 .partitionBy("day", "hhmm"))
-            } else plans(ev).get(name).map(_.writeStream.format("noop"))
+            } else plan(ev, name).map(_.writeStream.format(DiscardSink.Format))
             sink.exists { w =>
-              val q = w.option("checkpointLocation", ckpt)
+              val q = w.option("checkpointLocation", ckpt.toString)
                 .trigger(Trigger.AvailableNow()).start()
               q.awaitTermination(timeoutMs) || { q.stop(); false }
             }
@@ -315,6 +336,6 @@ object NexmarkStreaming {
           System.err.println(s"[nexmark-streaming] $name: ${e.getMessage}")
           None
       }
-    }
+    } finally FileUtils.deleteQuietly(ckpt) // every query has stopped by now
   }
 }

@@ -4,8 +4,9 @@ import scala.collection.mutable
 
 import org.apache.spark.GraftTestBridge
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress, Trigger}
 import graft.queries.{Nexmark, NexmarkStreaming}
 
 /** Micro-batch Nexmark: the same plans produce the same answers whether
@@ -134,5 +135,82 @@ class NexmarkStreamingSpec extends GraftSpec {
     assert(above.nonEmpty && above.forall(_.isEmpty), above.distinct)
     assert(!spark.conf.getAll.contains("spark.sql.codegen.factoryMode"),
       "run must leave the session's factory mode unset")
+  }
+
+  /** What one call of `body` posts: every streaming query's micro-batch
+    * progress, the (query id, batch id) of every job a micro-batch
+    * launches, and the number of SQL executions started. */
+  private final class Recorded {
+    val progress = mutable.Buffer.empty[StreamingQueryProgress]
+    val batchJobs = mutable.Buffer.empty[(String, Long)]
+    var sqlExecutions = 0
+  }
+
+  private def recording(body: => Unit): Recorded = {
+    val r = new Recorded
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = r.synchronized {
+        for (p <- Option(e.properties); q <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          r.batchJobs += q -> b.toLong
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = r.synchronized {
+        e match {
+          case _: SparkListenerSQLExecutionStart => r.sqlExecutions += 1
+          case p: StreamingQueryListener.QueryProgressEvent => r.progress += p.progress
+          case _ =>
+        }
+      }
+    }
+    GraftTestBridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      GraftTestBridge.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    r
+  }
+
+  test("run opens one SQL execution per micro-batch") {
+    // A V2 sink such as noop runs each micro-batch as a nested collect(),
+    // a second SQL execution that re-plans the batch for its explain string
+    val r = recording(assert(NexmarkStreaming.run(spark, "q5", 5000, 1000).isDefined))
+    assert(r.progress.size >= 6, s"${r.progress.size} micro-batches")
+    assert(r.sqlExecutions == r.progress.size,
+      s"${r.sqlExecutions} SQL executions for ${r.progress.size} micro-batches")
+  }
+
+  test("run executes every micro-batch in full, as a memory sink does") {
+    val (n, perBatch) = (5000L, 1000L)
+    for (name <- Seq("q0", "q3", "q5")) {
+      val viaRun = recording(assert(NexmarkStreaming.run(spark, name, n, perBatch).isDefined))
+      val viaMemory = recording(NexmarkStreaming.withRunConf(spark, n, perBatch) {
+        val ckpt = java.nio.file.Files.createTempDirectory(s"nxs-full-$name").toString
+        val q = NexmarkStreaming.plan(NexmarkStreaming.stream(spark, n, perBatch), name).get
+          .writeStream.format("memory").queryName(s"nxs_full_$name")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        assert(q.awaitTermination(120000), s"$name did not finish")
+      })
+      def inputRows(r: Recorded): Long = r.progress.map(_.numInputRows).sum
+      assert(inputRows(viaMemory) > 0, name)
+      assert(inputRows(viaRun) == inputRows(viaMemory), name)
+      val dataBatches = viaRun.progress
+        .filter(_.sources.exists(s => s.startOffset != s.endOffset))
+        .map(p => p.id.toString -> p.batchId)
+      assert(dataBatches.size == n / perBatch, s"$name: $dataBatches")
+      val withoutJob = dataBatches.filterNot(viaRun.batchJobs.toSet)
+      assert(withoutJob.isEmpty, s"$name: data micro-batches that ran no job: $withoutJob")
+    }
+  }
+
+  test("run deletes its checkpoint directory") {
+    def checkpoints(): Set[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSet.flatten
+        .filter(_.startsWith("graft-nexmark-stream-"))
+    val before = checkpoints()
+    for (name <- Seq("q0", "q4", "q10"))
+      assert(NexmarkStreaming.run(spark, name, 2000, 1000).isDefined, name)
+    assert(checkpoints() -- before == Set.empty)
   }
 }
