@@ -17,9 +17,12 @@ import org.apache.spark.sql.{Dataset, Encoder}
   * the shuffle is one hash exchange on the partition key, and the memory
   * bound is max-events-per-key per task — the same bound every
   * MATCH_RECOGNIZE implementation (including the reference NFA, which
-  * buffers candidate matches per key) carries. Streaming: the same
-  * matcher runs inside graft.streaming.Stateful with the event buffer as
-  * state, flushed on watermark.
+  * buffers candidate matches per key) carries. Streaming: `matchStream`
+  * runs the same matcher in its own `flatMapGroupsWithState` with the
+  * event buffer as state, flushed on watermark by an event-time timeout.
+  * It does not use graft.streaming.Stateful (transformWithState), so
+  * streaming MATCH_RECOGNIZE runs on any state store provider, not only
+  * RocksDB.
   */
 object Pattern extends Serializable {
 

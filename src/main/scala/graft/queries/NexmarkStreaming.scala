@@ -50,8 +50,9 @@ import graft.streaming.DiscardSink
   * Micro-batch cost is mostly fixed per trigger, not per row (the
   * Structured Streaming paper's price of micro-batch execution), so `run`
   * trims what every trigger pays:
-  *  - expressions evaluate interpreted when a micro-batch holds at most
-  *    [[InterpretedMaxBatchRows]] rows: at that size the Janino compiles
+  *  - a micro-batch runs interpreted, operators and expressions alike,
+  *    when it holds at most [[InterpretedMaxBatchRows]] rows: at that
+  *    size the Janino compiles
   *    of expression classes, which no cache reuses across queries and
   *    which each new watermark literal makes new, cost more than they
   *    save; above it, where per-row evaluation outweighs compilation,
@@ -249,11 +250,15 @@ object NexmarkStreaming {
     *    (without it a coarse batching would report throughput on output
     *    that never materialized);
     *  - at most [[InterpretedMaxBatchRows]] rows per micro-batch,
-    *    `spark.sql.codegen.factoryMode=NO_CODEGEN`: the expression-level
-    *    generators (projections, predicates, orderings, row joiners of the
-    *    state-store and join operators) evaluate interpreted, while
-    *    whole-stage codegen stays on. Generated, each is a Janino compile
-    *    of 12–15 ms that small batches never pay back: Spark's codegen
+    *    `spark.sql.codegen.factoryMode=NO_CODEGEN`: the micro-batch runs
+    *    fully interpreted. Under that mode Spark 4.1.2's
+    *    `CollapseCodegenStages` inserts no `WholeStageCodegenExec` (the
+    *    `plans/r16` micro-batch plans hold no `WholeStageCodegen` node),
+    *    so the operators evaluate interpreted along with the
+    *    expression-level generators (projections, predicates, orderings,
+    *    row joiners of the state-store and join operators). Generated,
+    *    each generator is a Janino compile of 12–15 ms that small batches
+    *    never pay back: Spark's codegen
     *    cache is keyed by (context classloader, source) and every
     *    streaming query runs its tasks under a fresh executor classloader
     *    (its cloned session's), so each run compiles its classes again

@@ -1084,18 +1084,16 @@ object TrainingData extends QueryModule {
       |  doc_id % 10 = 0 AS updated
       |FROM documents WHERE doc_id % 20 <> 0 ORDER BY doc_id""".stripMargin
 
-  // Streaming Deduplicate-with-TTL on the NATIVE stateful substrate
-  // (transformWithState — streaming/StatefulV2.scala): the first
-  // ORACLE-gated path that executes the V2 engine. StatefulV2Spec pins
-  // V1 ≡ V2 and plan-asserts the TransformWithState operator; this gate
-  // pins the substrate against the batch-semantic DuckDB oracle through a
-  // real file stream. doc_id folds down mod 500 so duplicate keys recur
+  // Streaming Deduplicate-with-TTL on the stateful substrate
+  // (transformWithState — streaming/Stateful.scala). StatefulV2Spec
+  // plan-asserts the TransformWithState operator; this gate pins the
+  // substrate against the batch-semantic DuckDB oracle through a real
+  // file stream. doc_id folds down mod 500 so duplicate keys recur
   // within AND across micro-batches (maxFilesPerTrigger=2 over 8 files);
   // the emitted value is a pure function of the key, so "first arrival
   // wins" is deterministic whatever batch order the file source picks.
-  // transformWithState ships on RocksDB only: the provider conf is set for
-  // the stream and restored only AFTER the query stops — swapping it under
-  // a live query races the in-flight checkpoint (StatefulV2Spec.withRocks).
+  // transformWithState ships on RocksDB only, so the stream runs inside
+  // Stateful.withRocksDB.
   // Reference analog: transforms/Deduplicate.java:68 on the portable
   // state/timers runner path (DoFn.java:475–540).
   private def s148(s: SparkSession, dir: String): DataFrame = {
@@ -1106,14 +1104,11 @@ object TrainingData extends QueryModule {
       .select((col("doc_id") % 500).cast("long").as("k"))
       .withColumn("v", col("k") * 2 + 1)
       .repartition(8).write.mode("overwrite").parquet(inDir)
-    val (ck, cv) = graft.streaming.StatefulV2.requiredConf
-    val prev = s.conf.getOption(ck)
-    s.conf.set(ck, cv)
-    try {
+    graft.streaming.Stateful.withRocksDB(s) {
       val pairs = s.readStream.schema("k LONG, v LONG")
         .option("maxFilesPerTrigger", 2).parquet(inDir)
         .as[(Long, Long)].map(r => (r._1, r))
-      val q = graft.streaming.StatefulV2.deduplicate(pairs, ttlMs = 3600000L)
+      val q = graft.streaming.Stateful.deduplicate(pairs, ttlMs = 3600000L)
         .toDF("k", "v")
         .writeStream.format("parquet").option("path", outDir)
         .option("checkpointLocation", ckpt).outputMode("append")
@@ -1140,7 +1135,7 @@ object TrainingData extends QueryModule {
             System.currentTimeMillis() < pollDeadline)
           Thread.sleep(5)
       } finally q.stop()
-    } finally prev.fold(s.conf.unset(ck))(v => s.conf.set(ck, v))
+    }
     s.read.parquet(outDir).orderBy("k")
   }
 
@@ -1149,12 +1144,11 @@ object TrainingData extends QueryModule {
       |  CAST((doc_id % 500) * 2 + 1 AS BIGINT) AS v
       |FROM documents ORDER BY k""".stripMargin
 
-  // GroupIntoBatches on the NATIVE stateful substrate (r10 — the second
-  // oracle gate through transformWithState, after s148): the
-  // ListState-buffered, epoch-timer-managed batcher
-  // (StatefulV2.groupIntoBatchesListState) run through a real file
-  // stream on the RocksDB provider. Determinism argument: v is a pure
-  // function of k (v = 2k+1) and elements only leave through FULL
+  // GroupIntoBatches on the stateful substrate (r10 — the second oracle
+  // gate through transformWithState, after s148): the ListState-buffered,
+  // epoch-timer-managed batcher (Stateful.groupIntoBatches) run through a
+  // real file stream on the RocksDB provider. Determinism argument: v is
+  // a pure function of k (v = 2k+1) and elements only leave through FULL
   // batches (maxWaitMs = 10 min ≫ the gate's poll window, so the flush
   // timer never fires; per-key counts divide the batch size at the gate
   // SF, and were they not to, both sides would agree on floor(n/B)
@@ -1162,7 +1156,7 @@ object TrainingData extends QueryModule {
   // the flushed multiset is exactly floor(n_k/B) batches of B identical
   // values per key. The timer/epoch machinery still executes for real:
   // every carried partial batch arms/deletes/re-arms its deadline across
-  // bundles (the r9 epoch-correctness logic, StatefulV2.scala:249).
+  // bundles (the r9 epoch-correctness logic in Stateful.groupIntoBatches).
   // Reference analog: GroupIntoBatches.java:59 on the state/timers path.
   private def s152(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1175,14 +1169,11 @@ object TrainingData extends QueryModule {
     val expectedBatches = s.read.parquet(inDir).groupBy("k").count()
       .agg(coalesce(sum(floor(col("count") / 5)), lit(0L)).as("b"))
       .head().getLong(0)
-    val (ck, cv) = graft.streaming.StatefulV2.requiredConf
-    val prev = s.conf.getOption(ck)
-    s.conf.set(ck, cv)
-    try {
+    graft.streaming.Stateful.withRocksDB(s) {
       val pairs = s.readStream.schema("k LONG, v LONG")
         .option("maxFilesPerTrigger", 2).parquet(inDir)
         .as[(Long, Long)]
-      val q = graft.streaming.StatefulV2
+      val q = graft.streaming.Stateful
         .groupIntoBatches(pairs, batchSize = 5, maxWaitMs = 600000L)
         .toDF("k", "batch")
         .select(col("k"), size(col("batch")).cast("long").as("batch_size"),
@@ -1206,7 +1197,7 @@ object TrainingData extends QueryModule {
             System.currentTimeMillis() < pollDeadline)
           Thread.sleep(5)
       } finally q.stop()
-    } finally prev.fold(s.conf.unset(ck))(v => s.conf.set(ck, v))
+    }
     s.read.parquet(outDir).orderBy("k")
   }
 

@@ -17,8 +17,10 @@ import org.apache.spark.sql.functions._
   *    (chosen at the sink, advised by `outputModeFor`).
   *  - Triggers: default AfterWatermark ≙ Append mode emission at watermark;
   *    processing-time early firings ≙ Update mode with a processing-time
-  *    trigger. Count/composite triggers need the stateful layer
-  *    (graft.streaming.Stateful) — documented divergence.
+  *    trigger. Count, per-key processing-time, composite and late-firing
+  *    triggers are per-key state machines: they run as the
+  *    graft.streaming.Stateful operators (on `transformWithState`, so on
+  *    the RocksDB state store) alongside the windowed aggregation.
   */
 object Windows {
 

@@ -1,11 +1,41 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local[4] SparkSession per suite. */
 trait GraftSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSpec.session
+
+  /** A query with pending processing-time timers never quiesces: Spark
+    * schedules another (often empty) micro-batch after every batch so the
+    * timers get their chance to fire, so `processAllAvailable` never
+    * observes noNewData. Poll the memory sink until the expected row count
+    * lands instead. */
+  def awaitRows(table: String, n: Long, timeoutMs: Long = 120000): Unit = {
+    val deadline = System.currentTimeMillis() + timeoutMs
+    while (spark.table(table).count() < n && System.currentTimeMillis() < deadline)
+      Thread.sleep(200)
+    assert(spark.table(table).count() >= n,
+      s"$table did not reach $n rows within ${timeoutMs}ms")
+  }
+
+  /** Stop between triggers: a query with pending processing-time timers
+    * is almost always mid-batch, and a stop() landing there interrupts a
+    * state-store commit — the benign but noisy
+    * CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT task error. Waiting for the
+    * trigger to go idle stops inside the inter-trigger window, where no
+    * commit is in flight. */
+  def stopQuietly(qs: StreamingQuery*): Unit =
+    qs.foreach { q =>
+      val deadline = System.currentTimeMillis() + 5000
+      try {
+        while (q.status.isTriggerActive && System.currentTimeMillis() < deadline)
+          Thread.sleep(5)
+      } catch { case _: Throwable => }
+      q.stop()
+    }
 }
 
 object GraftSpec {

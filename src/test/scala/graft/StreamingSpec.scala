@@ -15,33 +15,6 @@ class StreamingSpec extends GraftSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  /** flatMapGroupsWithState + ProcessingTimeTimeout queries never quiesce
-    * (Spark schedules no-data batches forever to check timers, so
-    * `processAllAvailable` never observes noNewData). Poll the memory sink
-    * until the expected row count lands instead. */
-  private def awaitRows(table: String, n: Long, timeoutMs: Long = 120000): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (spark.table(table).count() < n && System.currentTimeMillis() < deadline)
-      Thread.sleep(200)
-    assert(spark.table(table).count() >= n,
-      s"$table did not reach $n rows within ${timeoutMs}ms")
-  }
-
-  /** Stop between triggers: those same never-quiescing timer queries are
-    * almost always mid-batch, and a stop() landing there interrupts a
-    * state-store commit — the benign but noisy
-    * CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT task error (same helper as
-    * StatefulV2Spec). */
-  private def stopQuietly(qs: org.apache.spark.sql.streaming.StreamingQuery*): Unit =
-    qs.foreach { q =>
-      val deadline = System.currentTimeMillis() + 5000
-      try {
-        while (q.status.isTriggerActive && System.currentTimeMillis() < deadline)
-          Thread.sleep(5)
-      } catch { case _: Throwable => }
-      q.stop()
-    }
-
   test("tumbling window with watermark drops late data (append mode)") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[(String, Timestamp)]
@@ -110,117 +83,126 @@ class StreamingSpec extends GraftSpec {
   }
 
   test("streaming deduplicate keeps first occurrence across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val deduped = Stateful.deduplicate(input.toDS(), ttlMs = 60000)
-    val q = deduped.writeStream.format("memory").queryName("deduped")
-      .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
-    try {
-      input.addData(("a", 1), ("a", 2), ("b", 3))
-      awaitRows("deduped", 2)
-      input.addData(("a", 4), ("c", 5)) // a is a cross-batch duplicate
-      awaitRows("deduped", 3)
-      val vals = spark.table("deduped").as[Int].collect().sorted.toSeq
-      assert(vals == Seq(1, 3, 5))
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val deduped = Stateful.deduplicate(input.toDS(), ttlMs = 60000)
+      val q = deduped.writeStream.format("memory").queryName("deduped")
+        .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
+      try {
+        input.addData(("a", 1), ("a", 2), ("b", 3))
+        awaitRows("deduped", 2)
+        input.addData(("a", 4), ("c", 5)) // a is a cross-batch duplicate
+        awaitRows("deduped", 3)
+        val vals = spark.table("deduped").as[Int].collect().sorted.toSeq
+        assert(vals == Seq(1, 3, 5))
+      } finally stopQuietly(q)
+    }
   }
 
   test("late-firing panes: a late element fires a LATE pane instead of dropping") {
-    // reference AfterWatermark.pastEndOfWindow().withLateFirings(
-    // AfterPane.elementCountAtLeast(1)) + allowed lateness: the on-time
-    // pane fires when the watermark crosses the window end; a late element
-    // within allowed lateness RE-FIRES the (accumulating) pane as LATE;
-    // past end + lateness the window is expired and elements drop.
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Timestamp, Int)]
-    val panes = Stateful.lateFiringPanes(
-      input.toDS(), windowMs = 60000L, allowedLatenessMs = 120000L,
-      watermarkDelay = "0 seconds", zero = 0, add = (a: Int, v: Int) => a + v)
-    val q = panes.writeStream.format("memory").queryName("late_panes")
-      .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
-    try {
-      input.addData(("a", ts("2024-01-01 00:00:10"), 1), ("a", ts("2024-01-01 00:00:40"), 2))
-      // advance the watermark past the window end -> ON_TIME pane (value 3)
-      input.addData(("b", ts("2024-01-01 00:02:00"), 0))
-      awaitRows("late_panes", 1)
-      // late element within allowed lateness -> LATE pane (value 3 + 5)
-      input.addData(("a", ts("2024-01-01 00:00:50"), 5))
-      awaitRows("late_panes", 2)
-      // advance past end + lateness -> window GC'd (also closes b's first
-      // window, whose own expiry flushes its pending pane: row 3)...
-      input.addData(("b", ts("2024-01-01 00:10:00"), 0))
-      awaitRows("late_panes", 3)
-      // ...so a too-late element is dropped, not re-fired
-      input.addData(("a", ts("2024-01-01 00:00:55"), 9))
-      Thread.sleep(3000) // several poll cycles: a drop emits nothing
-      val aPanes = spark.table("late_panes")
-        .as[(String, Long, Int, Long, String)].collect()
-        .filter(_._1 == "a").sortBy(_._4).toSeq
-      val winStart = ts("2024-01-01 00:00:00").getTime
-      assert(aPanes == Seq(
-        ("a", winStart, 3, 0L, "ON_TIME"),
-        ("a", winStart, 8, 1L, "LATE")), s"got $aPanes")
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      // reference AfterWatermark.pastEndOfWindow().withLateFirings(
+      // AfterPane.elementCountAtLeast(1)) + allowed lateness: the on-time
+      // pane fires when the watermark crosses the window end; a late element
+      // within allowed lateness RE-FIRES the (accumulating) pane as LATE;
+      // past end + lateness the window is expired and elements drop.
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Timestamp, Int)]
+      val panes = Stateful.lateFiringPanes(
+        input.toDS(), windowMs = 60000L, allowedLatenessMs = 120000L,
+        watermarkDelay = "0 seconds", zero = 0, add = (a: Int, v: Int) => a + v)
+      val q = panes.writeStream.format("memory").queryName("late_panes")
+        .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
+      try {
+        input.addData(("a", ts("2024-01-01 00:00:10"), 1), ("a", ts("2024-01-01 00:00:40"), 2))
+        // advance the watermark past the window end -> ON_TIME pane (value 3)
+        input.addData(("b", ts("2024-01-01 00:02:00"), 0))
+        awaitRows("late_panes", 1)
+        // late element within allowed lateness -> LATE pane (value 3 + 5)
+        input.addData(("a", ts("2024-01-01 00:00:50"), 5))
+        awaitRows("late_panes", 2)
+        // advance past end + lateness -> window GC'd (also closes b's first
+        // window, whose own expiry flushes its pending pane: row 3)...
+        input.addData(("b", ts("2024-01-01 00:10:00"), 0))
+        awaitRows("late_panes", 3)
+        // ...so a too-late element is dropped, not re-fired
+        input.addData(("a", ts("2024-01-01 00:00:55"), 9))
+        Thread.sleep(3000) // several poll cycles: a drop emits nothing
+        val aPanes = spark.table("late_panes")
+          .as[(String, Long, Int, Long, String)].collect()
+          .filter(_._1 == "a").sortBy(_._4).toSeq
+        val winStart = ts("2024-01-01 00:00:00").getTime
+        assert(aPanes == Seq(
+          ("a", winStart, 3, 0L, "ON_TIME"),
+          ("a", winStart, 8, 1L, "LATE")), s"got $aPanes")
+      } finally stopQuietly(q)
+    }
   }
 
   test("late-firing panes: too-late element GCs state and flushes the pending pane") {
-    // Regression: a too-late element arriving BEFORE the poll timer notices
-    // the watermark crossed end+lateness must not leak state or drop the
-    // pending unfired ON_TIME pane. pollMs is set to an hour so the poll
-    // never runs in-test: the too-late element's own batch is the only
-    // code path that can flush — exercising the wm >= gcAt data branch.
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Timestamp, Int)]
-    val panes = Stateful.lateFiringPanes(
-      input.toDS(), windowMs = 60000L, allowedLatenessMs = 60000L,
-      watermarkDelay = "0 seconds", zero = 0, add = (a: Int, v: Int) => a + v,
-      pollMs = 3600000L)
-    val q = panes.writeStream.format("memory").queryName("late_gc")
-      .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
-    // FMGWS + ProcessingTimeTimeout queries never quiesce (see awaitRows
-    // note) — poll the query's watermark instead of processAllAvailable.
-    def awaitWatermark(atLeast: Timestamp, timeoutMs: Long = 60000): Unit = {
-      val deadline = System.currentTimeMillis() + timeoutMs
-      def wm: Long = Option(q.lastProgress)
-        .flatMap(p => Option(p.eventTime.get("watermark")))
-        .map(java.time.Instant.parse(_).toEpochMilli).getOrElse(0L)
-      while (wm < atLeast.getTime && System.currentTimeMillis() < deadline)
-        Thread.sleep(200)
-      assert(wm >= atLeast.getTime, s"watermark stuck at $wm")
+    Stateful.withRocksDB(spark) {
+      // Regression: a too-late element arriving BEFORE the poll timer notices
+      // the watermark crossed end+lateness must not leak state or drop the
+      // pending unfired ON_TIME pane. pollMs is set to an hour so the poll
+      // never runs in-test: the too-late element's own batch is the only
+      // code path that can flush — exercising the wm >= gcAt data branch.
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Timestamp, Int)]
+      val panes = Stateful.lateFiringPanes(
+        input.toDS(), windowMs = 60000L, allowedLatenessMs = 60000L,
+        watermarkDelay = "0 seconds", zero = 0, add = (a: Int, v: Int) => a + v,
+        pollMs = 3600000L)
+      val q = panes.writeStream.format("memory").queryName("late_gc")
+        .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
+      // processing-time timer queries never quiesce (see
+      // GraftSpec.awaitRows) — poll the query's watermark instead of
+      // processAllAvailable.
+      def awaitWatermark(atLeast: Timestamp, timeoutMs: Long = 60000): Unit = {
+        val deadline = System.currentTimeMillis() + timeoutMs
+        def wm: Long = Option(q.lastProgress)
+          .flatMap(p => Option(p.eventTime.get("watermark")))
+          .map(java.time.Instant.parse(_).toEpochMilli).getOrElse(0L)
+        while (wm < atLeast.getTime && System.currentTimeMillis() < deadline)
+          Thread.sleep(200)
+        assert(wm >= atLeast.getTime, s"watermark stuck at $wm")
+      }
+      try {
+        input.addData(("a", ts("2024-01-01 00:00:10"), 7)) // accumulates, pane unfired
+        // jump the watermark straight past end (00:01) + lateness (00:02)
+        input.addData(("b", ts("2024-01-01 00:30:00"), 0))
+        awaitWatermark(ts("2024-01-01 00:30:00"))
+        // too-late element: value 9 must be dropped, but the pending pane
+        // (value 7) must flush and the state entry must be removed
+        input.addData(("a", ts("2024-01-01 00:00:20"), 9))
+        awaitRows("late_gc", 1)
+        // a second too-late element must now find no state → emit nothing
+        input.addData(("a", ts("2024-01-01 00:00:30"), 11))
+        Thread.sleep(2000)
+        val aPanes = spark.table("late_gc")
+          .as[(String, Long, Int, Long, String)].collect()
+          .filter(_._1 == "a").toSeq
+        val winStart = ts("2024-01-01 00:00:00").getTime
+        assert(aPanes == Seq(("a", winStart, 7, 0L, "ON_TIME")), s"got $aPanes")
+      } finally stopQuietly(q)
     }
-    try {
-      input.addData(("a", ts("2024-01-01 00:00:10"), 7)) // accumulates, pane unfired
-      // jump the watermark straight past end (00:01) + lateness (00:02)
-      input.addData(("b", ts("2024-01-01 00:30:00"), 0))
-      awaitWatermark(ts("2024-01-01 00:30:00"))
-      // too-late element: value 9 must be dropped, but the pending pane
-      // (value 7) must flush and the state entry must be removed
-      input.addData(("a", ts("2024-01-01 00:00:20"), 9))
-      awaitRows("late_gc", 1)
-      // a second too-late element must now find no state → emit nothing
-      input.addData(("a", ts("2024-01-01 00:00:30"), 11))
-      Thread.sleep(2000)
-      val aPanes = spark.table("late_gc")
-        .as[(String, Long, Int, Long, String)].collect()
-        .filter(_._1 == "a").toSeq
-      val winStart = ts("2024-01-01 00:00:00").getTime
-      assert(aPanes == Seq(("a", winStart, 7, 0L, "ON_TIME")), s"got $aPanes")
-    } finally stopQuietly(q)
   }
 
   test("groupIntoBatches flushes full batches immediately") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val batched = Stateful.groupIntoBatches(input.toDS(), batchSize = 2, maxWaitMs = 3600000)
-    val q = batched.writeStream.format("memory").queryName("batched")
-      .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
-    try {
-      input.addData(("a", 1), ("a", 2), ("a", 3), ("b", 9))
-      awaitRows("batched", 1)
-      val out = spark.table("batched").as[(String, Seq[Int])].collect()
-      // a: one full batch of 2 emitted, 1 buffered; b: buffered
-      assert(out.toSeq == Seq(("a", Seq(1, 2))))
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val batched = Stateful.groupIntoBatches(input.toDS(), batchSize = 2, maxWaitMs = 3600000)
+      val q = batched.writeStream.format("memory").queryName("batched")
+        .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
+      try {
+        input.addData(("a", 1), ("a", 2), ("a", 3), ("b", 9))
+        awaitRows("batched", 1)
+        val out = spark.table("batched").as[(String, Seq[Int])].collect()
+        // a: one full batch of 2 emitted, 1 buffered; b: buffered
+        assert(out.toSeq == Seq(("a", Seq(1, 2))))
+      } finally stopQuietly(q)
+    }
   }
 
   test("session windows merge within gap on a stream") {
@@ -386,145 +368,160 @@ class StreamingSpec extends GraftSpec {
   }
 
   test("count-triggered early firing emits running panes every N elements") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val panes = Stateful.countTriggered[String, Int, Long](
-      input.toDS(), zero = 0L, add = (a, v) => a + v, every = 2)
-    val q = panes.toDF("k", "running_sum", "pane")
-      .writeStream.format("memory").queryName("panes")
-      .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
-    try {
-      input.addData(("a", 1), ("a", 2), ("a", 3), ("a", 4), ("a", 5))
-      awaitRows("panes", 2)
-      val rows = spark.table("panes").as[(String, Long, Long)].collect().sortBy(_._3)
-      // accumulating panes: pane 0 after 2 elements (sum 3), pane 1 after 4 (sum 10)
-      assert(rows.toSeq == Seq(("a", 3L, 0L), ("a", 10L, 1L)))
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val panes = Stateful.countTriggered[String, Int, Long](
+        input.toDS(), zero = 0L, add = (a, v) => a + v, every = 2)
+      val q = panes.toDF("k", "running_sum", "pane")
+        .writeStream.format("memory").queryName("panes")
+        .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
+      try {
+        input.addData(("a", 1), ("a", 2), ("a", 3), ("a", 4), ("a", 5))
+        awaitRows("panes", 2)
+        val rows = spark.table("panes").as[(String, Long, Long)].collect().sortBy(_._3)
+        // accumulating panes: pane 0 after 2 elements (sum 3), pane 1 after 4 (sum 10)
+        assert(rows.toSeq == Seq(("a", 3L, 0L), ("a", 10L, 1L)))
+      } finally stopQuietly(q)
+    }
   }
 
   test("orFinally: repeated count panes until the total closes the key") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val panes = Stateful.orFinallyTriggered[String, Int, Long](
-      input.toDS(), zero = 0L, add = (a, v) => a + v, every = 2, total = 5)
-    val q = panes.toDF("k", "running_sum", "pane", "is_final")
-      .writeStream.format("memory").queryName("or_finally")
-      .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
-    try {
-      input.addData(("a", 1), ("a", 2), ("a", 3), ("a", 4), ("a", 5),
-        ("a", 100), ("a", 200)) // the last two land after the close
-      awaitRows("or_finally", 3)
-      Thread.sleep(500) // would surface any post-final extra pane
-      val rows = spark.table("or_finally").as[(String, Long, Long, Boolean)]
-        .collect().sortBy(_._3)
-      // panes 0,1 every 2 elements; 5th element satisfies the until-side:
-      // final pane, then the key is closed and 100/200 are discarded
-      assert(rows.toSeq == Seq(("a", 3L, 0L, false), ("a", 10L, 1L, false),
-        ("a", 15L, 2L, true)))
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val panes = Stateful.orFinallyTriggered[String, Int, Long](
+        input.toDS(), zero = 0L, add = (a, v) => a + v, every = 2, total = 5)
+      val q = panes.toDF("k", "running_sum", "pane", "is_final")
+        .writeStream.format("memory").queryName("or_finally")
+        .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
+      try {
+        input.addData(("a", 1), ("a", 2), ("a", 3), ("a", 4), ("a", 5),
+          ("a", 100), ("a", 200)) // the last two land after the close
+        awaitRows("or_finally", 3)
+        Thread.sleep(500) // would surface any post-final extra pane
+        val rows = spark.table("or_finally").as[(String, Long, Long, Boolean)]
+          .collect().sortBy(_._3)
+        // panes 0,1 every 2 elements; 5th element satisfies the until-side:
+        // final pane, then the key is closed and 100/200 are discarded
+        assert(rows.toSeq == Seq(("a", 3L, 0L, false), ("a", 10L, 1L, false),
+          ("a", 15L, 2L, true)))
+      } finally stopQuietly(q)
+    }
   }
 
   test("afterEach: sequenced count sub-triggers fire in order, then finish") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val panes = Stateful.afterEachTriggered[String, Int, Long](
-      input.toDS(), zero = 0L, add = (a, v) => a + v, counts = Seq(1, 2, 3))
-    val q = panes.toDF("k", "running_sum", "pane")
-      .writeStream.format("memory").queryName("after_each")
-      .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
-    try {
-      input.addData((1 to 8).map(i => ("a", i)): _*) // 6 consume the sequence; 7,8 after finish
-      awaitRows("after_each", 3)
-      Thread.sleep(500)
-      val rows = spark.table("after_each").as[(String, Long, Long)].collect().sortBy(_._3)
-      // pane 0 after 1 element, pane 1 after 2 more, pane 2 after 3 more;
-      // elements 7,8 arrive on a finished sequence and never fire
-      assert(rows.toSeq == Seq(("a", 1L, 0L), ("a", 6L, 1L), ("a", 21L, 2L)))
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val panes = Stateful.afterEachTriggered[String, Int, Long](
+        input.toDS(), zero = 0L, add = (a, v) => a + v, counts = Seq(1, 2, 3))
+      val q = panes.toDF("k", "running_sum", "pane")
+        .writeStream.format("memory").queryName("after_each")
+        .outputMode("append").trigger(Trigger.ProcessingTime(200)).start()
+      try {
+        input.addData((1 to 8).map(i => ("a", i)): _*) // 6 consume the sequence; 7,8 after finish
+        awaitRows("after_each", 3)
+        Thread.sleep(500)
+        val rows = spark.table("after_each").as[(String, Long, Long)].collect().sortBy(_._3)
+        // pane 0 after 1 element, pane 1 after 2 more, pane 2 after 3 more;
+        // elements 7,8 arrive on a finished sequence and never fire
+        assert(rows.toSeq == Seq(("a", 1L, 0L), ("a", 6L, 1L), ("a", 21L, 2L)))
+      } finally stopQuietly(q)
+    }
   }
 
   test("processing-time early firing emits a running pane after the delay") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val panes = Stateful.processingTimeTriggered[String, Int, Long](
-      input.toDS(), zero = 0L, add = (a, v) => a + v, delayMs = 500)
-    val q = panes.toDF("k", "running_sum", "pane")
-      .writeStream.format("memory").queryName("pt_panes")
-      .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
-    try {
-      input.addData(("a", 1), ("a", 2))
-      awaitRows("pt_panes", 1) // pane 0 fires ~500ms after the first element
-      input.addData(("a", 4))
-      awaitRows("pt_panes", 2) // new element re-arms; pane 1 is accumulating
-      val rows = spark.table("pt_panes").as[(String, Long, Long)].collect().sortBy(_._3)
-      assert(rows.toSeq == Seq(("a", 3L, 0L), ("a", 7L, 1L)))
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val panes = Stateful.processingTimeTriggered[String, Int, Long](
+        input.toDS(), zero = 0L, add = (a, v) => a + v, delayMs = 500)
+      val q = panes.toDF("k", "running_sum", "pane")
+        .writeStream.format("memory").queryName("pt_panes")
+        .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
+      try {
+        input.addData(("a", 1), ("a", 2))
+        awaitRows("pt_panes", 1) // pane 0 fires ~500ms after the first element
+        input.addData(("a", 4))
+        awaitRows("pt_panes", 2) // new element re-arms; pane 1 is accumulating
+        val rows = spark.table("pt_panes").as[(String, Long, Long)].collect().sortBy(_._3)
+        assert(rows.toSeq == Seq(("a", 3L, 0L), ("a", 7L, 1L)))
+      } finally stopQuietly(q)
+    }
   }
 
   test("hot keys drain processing-time panes while receiving data every batch") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val panes = Stateful.processingTimeTriggered[String, Int, Long](
-      input.toDS(), zero = 0L, add = (a, v) => a + v, delayMs = 400)
-    val q = panes.toDF("k", "running_sum", "pane")
-      .writeStream.format("memory").queryName("hot_panes")
-      .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
-    try {
-      // Feed the key faster than the trigger interval so (nearly) every
-      // micro-batch has data: Spark then never invokes hasTimedOut for it,
-      // and panes only appear if the element path drains overdue timers.
-      val stopAt = System.currentTimeMillis() + 30000
-      var fired = false
-      while (System.currentTimeMillis() < stopAt && !fired) {
-        input.addData(("a", 1))
-        Thread.sleep(60)
-        fired = spark.table("hot_panes").count() >= 2
-      }
-      assert(fired, "hot key never fired a processing-time pane while receiving data every batch")
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val panes = Stateful.processingTimeTriggered[String, Int, Long](
+        input.toDS(), zero = 0L, add = (a, v) => a + v, delayMs = 400)
+      val q = panes.toDF("k", "running_sum", "pane")
+        .writeStream.format("memory").queryName("hot_panes")
+        .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
+      try {
+        // Feed the key faster than the trigger interval so (nearly) every
+        // micro-batch has data: its panes must still fire, whether the
+        // element path drains the overdue deadline or the native timer
+        // fires after the batch's rows.
+        val stopAt = System.currentTimeMillis() + 30000
+        var fired = false
+        while (System.currentTimeMillis() < stopAt && !fired) {
+          input.addData(("a", 1))
+          Thread.sleep(60)
+          fired = spark.table("hot_panes").count() >= 2
+        }
+        assert(fired, "hot key never fired a processing-time pane while receiving data every batch")
+      } finally stopQuietly(q)
+    }
   }
 
   test("AfterFirst(count, processing-time) fires on whichever satisfies first") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val panes = Stateful.firstOfTriggered[String, Int, Long](
-      input.toDS(), zero = 0L, add = (a, v) => a + v, every = 3, delayMs = 700)
-    val q = panes.toDF("k", "running_sum", "pane")
-      .writeStream.format("memory").queryName("first_of")
-      .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
-    try {
-      input.addData(("a", 1), ("a", 2)) // below count: the 700ms clock fires
-      awaitRows("first_of", 1)
-      input.addData(("a", 3), ("a", 4), ("a", 5)) // count side fires at once
-      awaitRows("first_of", 2)
-      val rows = spark.table("first_of").as[(String, Long, Long)].collect().sortBy(_._3)
-      assert(rows.toSeq == Seq(("a", 3L, 0L), ("a", 15L, 1L)))
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val panes = Stateful.firstOfTriggered[String, Int, Long](
+        input.toDS(), zero = 0L, add = (a, v) => a + v, every = 3, delayMs = 700)
+      val q = panes.toDF("k", "running_sum", "pane")
+        .writeStream.format("memory").queryName("first_of")
+        .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
+      try {
+        input.addData(("a", 1), ("a", 2)) // below count: the 700ms clock fires
+        awaitRows("first_of", 1)
+        input.addData(("a", 3), ("a", 4), ("a", 5)) // count side fires at once
+        awaitRows("first_of", 2)
+        val rows = spark.table("first_of").as[(String, Long, Long)].collect().sortBy(_._3)
+        assert(rows.toSeq == Seq(("a", 3L, 0L), ("a", 15L, 1L)))
+      } finally stopQuietly(q)
+    }
   }
 
   test("AfterAll(count, processing-time) fires only when both are satisfied") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val panes = Stateful.allOfTriggered[String, Int, Long](
-      input.toDS(), zero = 0L, add = (a, v) => a + v, every = 2, delayMs = 600)
-    val q = panes.toDF("k", "running_sum", "pane")
-      .writeStream.format("memory").queryName("all_of")
-      .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
-    try {
-      input.addData(("a", 1), ("a", 2)) // count met at once; clock not yet
-      Thread.sleep(300)
-      assert(spark.table("all_of").count() == 0,
-        "pane fired before the processing-time side was satisfied")
-      awaitRows("all_of", 1) // clock satisfies second -> pane 0 delivers
-      input.addData(("a", 4)) // arms pane 1's clock; count unmet
-      Thread.sleep(900) // clock satisfied first, count still unmet
-      assert(spark.table("all_of").count() == 1,
-        "pane fired before the count side was satisfied")
-      input.addData(("a", 8)) // count fills second -> pane 1 delivers
-      awaitRows("all_of", 2)
-      val rows = spark.table("all_of").as[(String, Long, Long)].collect().sortBy(_._3)
-      assert(rows.toSeq == Seq(("a", 3L, 0L), ("a", 15L, 1L)))
-    } finally stopQuietly(q)
+    Stateful.withRocksDB(spark) {
+      implicit val ctx = spark.sqlContext
+      val input = MemoryStream[(String, Int)]
+      val panes = Stateful.allOfTriggered[String, Int, Long](
+        input.toDS(), zero = 0L, add = (a, v) => a + v, every = 2, delayMs = 600)
+      val q = panes.toDF("k", "running_sum", "pane")
+        .writeStream.format("memory").queryName("all_of")
+        .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
+      try {
+        input.addData(("a", 1), ("a", 2)) // count met at once; clock not yet
+        Thread.sleep(300)
+        assert(spark.table("all_of").count() == 0,
+          "pane fired before the processing-time side was satisfied")
+        awaitRows("all_of", 1) // clock satisfies second -> pane 0 delivers
+        input.addData(("a", 4)) // arms pane 1's clock; count unmet
+        Thread.sleep(900) // clock satisfied first, count still unmet
+        assert(spark.table("all_of").count() == 1,
+          "pane fired before the count side was satisfied")
+        input.addData(("a", 8)) // count fills second -> pane 1 delivers
+        awaitRows("all_of", 2)
+        val rows = spark.table("all_of").as[(String, Long, Long)].collect().sortBy(_._3)
+        assert(rows.toSeq == Seq(("a", 3L, 0L), ("a", 15L, 1L)))
+      } finally stopQuietly(q)
+    }
   }
 
   test("windowed writes: file sink partitioned by window start (WriteFiles windowed writes)") {
@@ -576,15 +573,10 @@ class StreamingSpec extends GraftSpec {
   test("stateful queries run unchanged on the RocksDB state store") {
     // At 100 TB of stream state the per-key map outgrows executor heaps —
     // RocksDB is the disk-backed provider Spark ships for exactly that.
-    // The whole stateful substrate (windowed aggs AND the
-    // flatMapGroupsWithState state/timer machinery) must be
-    // provider-agnostic: identical results to the default in-memory
-    // HDFSBackedStateStore, only the state-store plumbing changes.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // Windowed aggregations must give the same results on it as on the
+    // default in-memory HDFSBackedStateStore, and the Stateful operators
+    // (transformWithState) run on it alone.
+    Stateful.withRocksDB(spark) {
       implicit val ctx = spark.sqlContext
       // windowed agg with watermark (StateStoreSave exec)
       val aggIn = MemoryStream[(String, Timestamp)]
@@ -595,7 +587,7 @@ class StreamingSpec extends GraftSpec {
         .select(col("k"), col("n"))
       val q1 = agg.writeStream.format("memory").queryName("rocks_agg")
         .outputMode("append").start()
-      // custom state cells + batching (FlatMapGroupsWithState exec)
+      // custom state cells + batching (TransformWithState exec)
       val batchIn = MemoryStream[(String, Int)]
       val batched = Stateful.groupIntoBatches(batchIn.toDS(), batchSize = 2,
         maxWaitMs = 3600000)
@@ -614,7 +606,7 @@ class StreamingSpec extends GraftSpec {
         val out = spark.table("rocks_batched").as[(String, Seq[Int])].collect()
         assert(out.toSeq == Seq(("a", Seq(1, 2))), out.toSeq.toString)
       } finally stopQuietly(q1, q2)
-    } finally old.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("windows DSL assigns identical structs on batch frames") {
