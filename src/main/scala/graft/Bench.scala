@@ -382,27 +382,28 @@ object Bench {
       }
       fresh()
     }
-    // exact-substring candidate discovery at scale: the winnowed path
-    // (only ~2/w of positions reach the exchange). Candidate-pair count,
-    // not spans — span extension is O(pairs), the exchange is the cost.
+    // exact-substring spans at scale: ExactSubstr.duplicateSpans, the path
+    // d107/d108 gate (only ~2/(w+1) of positions reach the anchor
+    // exchange; each anchor pair is checked by characters in a window of
+    // minLen + w − 1, then the kept runs merge into spans per document).
     // The official stage is a deterministic 2M-doc slice (the whole corpus
     // at ≤ 2M docs).
     timedSafe("exact_substr_winnowed_2m_slice") {
-      graft.dedup.ExactSubstr.winnowedCandidates(
+      graft.dedup.ExactSubstr.duplicateSpans(
         docs.filter(col("doc_id") % lit(math.max(nDocs / 2000000L, 1L)) === 0),
         "doc_id", "text")
         .write.format("noop").mode("overwrite").save()
     }
     fresh() // anchor/pair shuffles released before the next stage
-    // The full-corpus witness is TWO fingerprint-space passes, each over
-    // all docs and positions with the identical anchor-exchange shape at
-    // half the pair volume; pass0 ∪ pass1 ≡ the single pass exactly
-    // (ExactSubstrSpec). The split bounds disk: the single-pass anchor
-    // exchange + sort spill held ~2 copies of the 2G-row anchor stream and
-    // died ENOSPC at 10M docs, so each pass gets a fresh session.
+    // The full-corpus witness is TWO anchor-hash passes, each over all
+    // docs and positions with the identical anchor-exchange shape at half
+    // the pair volume; the merged spans of pass0 and pass1 are the single
+    // pass's (ExactSubstrSpec). The split bounds disk: the single-pass
+    // anchor exchange + sort spill held ~2 copies of the 2G-row anchor
+    // stream and died ENOSPC at 10M docs, so each pass gets a fresh session.
     for (part <- Seq(0, 1)) if (wanted(s"exact_substr_winnowed_pass$part")) {
       timedSafe(s"exact_substr_winnowed_pass$part") {
-        graft.dedup.ExactSubstr.winnowedCandidates(docs, "doc_id", "text",
+        graft.dedup.ExactSubstr.duplicateSpans(docs, "doc_id", "text",
             hashSplit = 2, hashPart = part)
           .write.format("noop").mode("overwrite").save()
       }

@@ -1,16 +1,17 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Exact duplicated-substring detection and removal — the ExactSubstr
   * dedup of Lee et al. 2022 ("Deduplicating Training Data Makes Language
-  * Models Better"), re-expressed as declarative Spark instead of a
-  * suffix array: a substring of at least `minLen` characters that occurs
-  * two or more times ANYWHERE in the corpus (across documents or within
-  * one) is reported as a maximal per-document span, and optionally cut
-  * out of the text.
+  * Models Better"), re-expressed as Spark instead of a suffix array: a
+  * substring of at least `minLen` characters that occurs two or more
+  * times ANYWHERE in the corpus (across documents or within one) is
+  * reported as a maximal per-document span, and optionally cut out of
+  * the text.
   *
   * Reference analog: the Beam model has no native operator for this —
   * it is the training-data-pipeline tier (same family as
@@ -18,67 +19,107 @@ import org.apache.spark.sql.functions._
   * and this finds VERBATIM repeated passages (boilerplate, licenses,
   * quoted chunks) that survive document-level dedup.
   *
-  * Scale anatomy (the suffix-array replacement):
+  * Anatomy (winnowing, Schleimer et al., SIGMOD'03, plus a bounded
+  * character check):
   *
-  *   scan → explode char positions → 128-bit gram fingerprint   (no shuffle)
-  *   → ONE exchange on the fingerprint (exchange-reused by both the
-  *     ≥2-count aggregate and the position semi-join that marks
-  *     duplicated positions)
-  *   → per-document sort of the surviving positions → gap-merge into
-  *     maximal spans (one narrow shuffle on doc id; only DUPLICATED
-  *     positions ride it)
+  *   scan → robust winnowing of the g-grams, g = minLen − w + 1, by the
+  *     native graft.plans.WinnowedAnchors (~2/(w+1) of positions)
+  *   → ONE exchange on the anchor hash; a sorted run walk pairs the
+  *     anchors of equal hash
+  *   → each pair's two windows of chars [p − (w−1), p + minLen − 1] are
+  *     cut from the text (one join per side) and compared by code point;
+  *     the matched run through the anchor's gram is kept iff ≥ minLen
+  *   → per-document union of the kept runs into maximal spans
   *
-  * The fingerprint exchange carries one row per character of corpus text
-  * (a gram starts at every position) — ~24 bytes/char, embarrassingly
-  * parallel but heavy at the extreme scale; [[winnowedCandidates]] below
-  * is the sampled variant whose shuffle is ~2/w of that with a provable
-  * detection guarantee. Grams are compared by their full 128-bit md5, so
-  * two distinct grams collide with probability ~2^-128 — the same
-  * fingerprint-not-bytes contract as [[Dedup.exact]].
+  * Why it is exact: a minLen-char substring is exactly one full window of
+  * w g-grams, so every copy of it holds that window's minimum gram at the
+  * same offset, and those positions are anchors of equal hash. Their
+  * pair's window contains the whole substring, so the check keeps a run
+  * that covers it; conversely a kept run is a character-verified repeat
+  * of ≥ minLen chars. A hash collision costs a check, never a span. Each
+  * check is O(minLen + w), whatever the length of the duplicate.
   *
-  * Within-document repeats count toward the ≥2 occurrences (Lee et al.
-  * treat self-repetition as duplication too); a document that repeats a
-  * 50-char line twice reports both copies' spans.
+  * Contracts:
+  *   - ids are unique bigints; a row with a null id neither reports spans
+  *     nor counts as an occurrence, and a null text has no substrings;
+  *   - positions count code points, as Spark's `substr` does;
+  *   - within-document repeats count (Lee et al. treat self-repetition as
+  *     duplication too); a document that repeats a 50-char line twice
+  *     reports both copies' spans;
+  *   - an anchor hash with more than `maxPerGram` occurrences pairs
+  *     nothing (the skip-huge-cluster guard of the LSH bucket cap), so the
+  *     covered characters are a subset of the uncapped result, and equal
+  *     to it when no anchor hash occurs more than `maxPerGram` times.
   */
 object ExactSubstr {
 
-  /** Positions (1-based) of every `minLen`-gram of `textCol`, keyed by
-    * the gram's 128-bit fingerprint: (id, i, h). */
-  private def grams(df: DataFrame, idCol: String, textCol: String,
-      minLen: Int): DataFrame =
-    df.select(col(idCol), col(textCol).as("__t"))
-      .withColumn("i", explode(when(length(col("__t")) >= minLen,
-        sequence(lit(1L), (length(col("__t")) - (minLen - 1)).cast("long")))
-        .otherwise(array().cast("array<long>"))))
-      .select(col(idCol), col("i"),
-        md5(encode(col("__t").substr(col("i"), lit(minLen)), "UTF-8")).as("h"))
-
-  /** Merge marked (id, i) positions into maximal covered spans: position
-    * i covers chars [i, i+minLen-1], so two marked positions belong to
-    * the same span iff their gap is ≤ minLen. One narrow per-id sort. */
-  private def mergeSpans(marked: DataFrame, idCol: String,
-      minLen: Int): DataFrame = {
-    val w = Window.partitionBy(idCol).orderBy("i")
-    marked
-      .withColumn("__new", when(lag("i", 1).over(w).isNull ||
-        col("i") - lag("i", 1).over(w) > minLen, 1).otherwise(0))
-      .withColumn("__grp", sum("__new").over(w))
-      .groupBy(col(idCol), col("__grp"))
-      .agg(min("i").as("span_start"),
-        (max("i") + (minLen - 1)).as("span_end"))
-      .select(col(idCol), col("span_start"), col("span_end"))
-  }
-
   /** Maximal spans of text covered by a ≥`minLen`-char substring that
     * occurs ≥2 times in the corpus: (id, span_start, span_end), 1-based
-    * inclusive character positions. */
+    * inclusive character positions.
+    *
+    * `hashSplit`/`hashPart` bound scratch disk on single-node runs: pass
+    * `hashPart` keeps only the anchors with pmod(h, hashSplit) = hashPart.
+    * Every anchor pair lands in exactly one pass, so the spans of the
+    * passes, merged, are the single-pass spans (spec-pinned). On a real
+    * cluster scratch is per-executor and ample — leave the default 1. */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 50): DataFrame = {
-    val g = grams(df, idCol, textCol, minLen)
-    val dup = g.groupBy("h").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= 2).select("h")
-    mergeSpans(g.join(dup, Seq("h"), "left_semi").select(col(idCol), col("i")),
-      idCol, minLen)
+      minLen: Int = 50, w: Int = 10, maxPerGram: Int = 1000,
+      hashSplit: Int = 1, hashPart: Int = 0): DataFrame = {
+    require(w >= 1 && minLen >= w, s"need 1 <= w <= minLen, got w=$w minLen=$minLen")
+    require(df.schema(idCol).dataType == LongType, s"$idCol must be bigint")
+    require(hashSplit >= 1 && hashPart >= 0 && hashPart < hashSplit,
+      s"hashPart $hashPart must be in [0, $hashSplit)")
+    val gramLen = minLen - w + 1
+    val docs = df.filter(col(idCol).isNotNull)
+      .select(col(idCol).as("id"), col(textCol).as("t"))
+    val allAnchors = docs.select(col("id"),
+        explode(graft.functions.winnowedAnchors(col("t"), gramLen, w)).as("a"))
+      .select(col("id"), col("a.i").as("i"), col("a.h").as("h"))
+    val anchors =
+      if (hashSplit == 1) allAnchors
+      else allAnchors.filter(pmod(col("h"), lit(hashSplit.toLong)) === hashPart)
+    // the matched run through the anchor gram, as offsets [lo, hi] from
+    // the anchor; None when shorter than minLen or when the anchor grams
+    // differ (a hash collision). `ka`/`kb`: the anchor's index in its window.
+    val matchedRun = udf { (a: String, ka: Int, b: String, kb: Int) =>
+      val (x, y) = (a.codePoints.toArray, b.codePoints.toArray)
+      def same(d: Int) = ka + d >= 0 && kb + d >= 0 &&
+        ka + d < x.length && kb + d < y.length && x(ka + d) == y(kb + d)
+      var hi = -1
+      while (same(hi + 1)) hi += 1
+      var lo = 0
+      while (same(lo - 1)) lo -= 1
+      if (hi >= gramLen - 1 && hi - lo + 1 >= minLen) Some((lo, hi)) else None
+    }
+    // each side's window: the anchor, up to w − 1 chars before it and
+    // minLen − 1 after it, clipped to the text
+    def lead(s: String) = least(col(s"pos_$s") - 1, lit(w - 1L))
+    def window(s: String) = col(s"t_$s").substr(
+      (col(s"pos_$s") - lead(s)).cast("int"), (lead(s) + minLen).cast("int"))
+    def side(s: String) = docs.select(col("id").as(s"id_$s"), col("t").as(s"t_$s"))
+    val checked = walkSortedAnchors(anchors, maxPerGram)
+      .join(side("a"), "id_a").join(side("b"), "id_b")
+      .select(col("id_a"), col("pos_a"), col("id_b"), col("pos_b"),
+        matchedRun(window("a"), lead("a").cast("int"),
+          window("b"), lead("b").cast("int")).as("r"))
+      .filter(col("r").isNotNull)
+    def run(s: String) = struct(col(s"id_$s").as(idCol),
+      (col(s"pos_$s") + col("r._1")).as("__s"), (col(s"pos_$s") + col("r._2")).as("__e"))
+    mergeSpans(checked.select(explode(array(run("a"), run("b"))).as("x")).select("x.*"),
+      idCol)
+  }
+
+  /** Union per-document runs [__s, __e] into maximal spans: a run opens a
+    * new span iff it starts after every earlier run's end + 1. */
+  private def mergeSpans(runs: DataFrame, idCol: String): DataFrame = {
+    val byStart = Window.partitionBy(idCol).orderBy("__s")
+    val reach = max("__e").over(byStart.rowsBetween(Window.unboundedPreceding, -1))
+    runs.withColumn("__reach", reach)
+      .withColumn("__grp", sum(when(col("__reach").isNull ||
+        col("__s") > col("__reach") + 1, 1).otherwise(0)).over(byStart))
+      .groupBy(col(idCol), col("__grp"))
+      .agg(min("__s").as("span_start"), max("__e").as("span_end"))
+      .select(col(idCol), col("span_start"), col("span_end"))
   }
 
   /** Cut every duplicated span out of the text: (id, text_scrubbed).
@@ -116,185 +157,32 @@ object ExactSubstr {
         coalesce(col("text_scrubbed"), col("__t")).as("text_scrubbed"))
   }
 
-  /** Winnowed duplicate-anchor candidates — the 100 TB path. Full
-    * fidelity shuffles one row per character; winnowing (Schleimer et
-    * al., SIGMOD'03) selects per-document anchor positions whose gram
-    * hash is minimal in a sliding window of `w` consecutive grams, which
-    * guarantees: any duplicated substring of length ≥ `minLen + w - 1`
-    * contributes at least one SHARED anchor fingerprint to both copies.
-    * Only anchors (~2/w of positions) reach the exchange. Returns
-    * matched anchor pairs (id_a, pos_a, id_b, pos_b, h) — candidates for
-    * exact extension/verification, which is O(span) local work per pair.
-    * Anchor selection is deterministic (xxhash64 order), so both copies
-    * of identical text select identical anchors. Self-pairs of the same
-    * (id, pos) are excluded; a hot fingerprint (boilerplate repeated
-    * corpus-wide) is capped at `maxPerGram` occurrences, the same
-    * skip-huge-cluster guard as the LSH bucket cap. */
-  def winnowedCandidates(df: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 50, w: Int = 10, maxPerGram: Int = 1000,
-      hashSplit: Int = 1, hashPart: Int = 0): DataFrame = {
-    // hashSplit/hashPart: SCRATCH-DISK bounding for single-node runs. The
-    // anchor exchange + its sort spill hold ~2 copies of the anchor
-    // stream on local disk at once (observed ENOSPC at 10M docs with
-    // ~60 GB free); splitting the fingerprint space into `hashSplit`
-    // passes — each pass keeps only anchors with pmod(h, split) = part —
-    // bounds peak scratch to ~1/split at the cost of re-running the
-    // anchor scan per pass. Every gram lands in exactly one pass, so the
-    // union of the passes' outputs IS the single-pass result (each gram's
-    // pair set is computed whole in its pass; spec-pinned). On a real
-    // cluster scratch is per-executor and ample — leave the default 1.
-    require(hashSplit >= 1 && hashPart >= 0 && hashPart < hashSplit,
-      s"hashPart $hashPart must be in [0, $hashSplit)")
-    // Anchor selection runs entirely INSIDE the scan stage — a
-    // per-document rolling min is doc-local by definition, and expressing
-    // it as a window function would first shuffle one row per corpus
-    // character into doc partitions (~200 GB at 10M docs) just to compute
-    // values that never needed to leave the scan. The kernel is the
-    // native graft.plans.WinnowedAnchors expression: one O(len) byte walk
-    // per document (sliding xxhash64 + monotonic-deque window minimum)
-    // instead of the equivalent-but-interpreted O(len·minLen) array
-    // arithmetic (`transform(sequence…, i -> xxhash64(substr(t,i,minLen)))`
-    // + per-position slice-min), which cost tens of MINUTES over a
-    // 10M-doc corpus. Equality of the two formulations is pinned in
-    // ExactSubstrSpec. An anchor is a position whose hash is minimal in
-    // the w-gram window ENDING at it (ties keep every minimal position —
-    // a superset of robust winnowing's rightmost-min, so the ≥ minLen+w-1
-    // detection guarantee still holds). Only anchors (~2/w of positions)
-    // are exploded onto the wire.
-    val allAnchors = df.select(col(idCol).as("id"),
-        explode(graft.functions.winnowedAnchors(col(textCol), minLen, w)).as("a"))
-      .select(col("id"), col("a.i").as("i"), col("a.h").as("h"))
-    val anchors =
-      if (hashSplit == 1) allAnchors
-      else allAnchors.filter(pmod(col("h"), lit(hashSplit.toLong)) === hashPart)
-    // ONE aggregate per fingerprint bucket: the cap filter and the
-    // pairwise expansion both read the collected (id, pos) list, so the
-    // anchor pipeline runs once and its rows cross the wire once. The
-    // previous self-join formulation executed the whole anchor scan per
-    // join side and held both sides' shuffle files simultaneously —
-    // ~4 copies of a ~1G-row exchange at 10M docs, the tier's remaining
-    // ENOSPC (observed at scale 100 with 66 GB of scratch). Same design
-    // as minhashCandidatePairs; per-bucket work is capped by maxPerGram.
-    // r11: the hot-gram guard (over-cap buckets must never materialize an
-    // unbounded (id, pos) list in one aggregation buffer) used to be a
-    // SEPARATE count aggregate + broadcast anti-join — which re-ran the
-    // whole anchor scan (the native winnow walk over every corpus byte, a
-    // second time per pass) and exchanged one (h, n) row per near-distinct
-    // gram just to learn which ~nothing is hot. bounded_collect_pairs
-    // folds the guard into the collect itself: the buffer hard-caps at
-    // maxPerGram+1 pairs, a saturated group surfaces as size =
-    // maxPerGram+1, and the unchanged BETWEEN(2, maxPerGram) filter drops
-    // it — same surviving groups, same complete lists for them (guide
-    // §2.4: one pass and one exchange instead of two of each; measured
-    // pass0 at 10M docs: 370.2 s → see OPTIMIZATION_r11.md).
-    //
-    // r11 second cut: the groups are NEAR-DISTINCT (~one anchor per gram),
-    // so the aggregate's hash map always blows past the ObjectHashAggregate
-    // fallback threshold and BOTH sides degenerate to sort-based
-    // aggregation — the map side sorts the full anchor stream once just to
-    // produce one 20-byte serialized buffer per (almost always singleton)
-    // group, the exchange carries those buffers, and the reduce side sorts
-    // AGAIN to merge them. Grouping near-distinct keys needs exactly ONE
-    // sort: shuffle the raw 24-byte (h, id, i) rows, radix-sort each
-    // reduce partition by h, and walk consecutive equal-h runs with the
-    // identical cap/filter/pair semantics (collect up to maxPerGram+1
-    // non-null entries; a run at maxPerGram+1 is saturated and dropped;
-    // surviving runs of 2..maxPerGram emit each unordered (id, i) pair
-    // once, oriented ascending — strict inequality, so duplicate entries
-    // never self-pair, exactly like the old strict-> lambda). Pair sets
-    // are bit-identical (ExactSubstrSpec pins walk ≡ aggregate on data
-    // with dup/hot/null-id arms; tools.WinnowPlans re-checks on the real
-    // corpus); measured pass0 at 10M docs: 225.7 → see OPTIMIZATION_r11.md
-    // (guide §2.3 project-before-exchange + §1.2 remove a redundant sort).
-    walkSortedAnchors(anchors, maxPerGram)
-  }
-
-  /** One-sort grouping of the anchor stream (see [[winnowedCandidates]]):
-    * hash-repartition on the fingerprint, per-partition sort, streaming
-    * run walk. Exists as its own method so the spec can compare it
-    * directly against the aggregate formulation it replaced. */
-  private[graft] def walkSortedAnchors(anchors: DataFrame,
-      maxPerGram: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = anchors.sparkSession
+  /** Every pair of anchors (id, i) that share a hash, as (id_a, pos_a,
+    * id_b, pos_b). One sort groups the near-distinct hashes: repartition
+    * on h, sort each partition, walk the runs of equal h. A run of more
+    * than `maxPerGram` anchors pairs nothing; its buffer stops at
+    * maxPerGram + 1 entries, so a corpus-wide hot gram stays bounded. */
+  private def walkSortedAnchors(anchors: DataFrame, maxPerGram: Int): DataFrame = {
     val cap = maxPerGram + 1
     val sorted = anchors.select(col("h"), col("id"), col("i"))
       .repartition(col("h")).sortWithinPartitions("h")
-    val out = sorted.queryExecution.toRdd.mapPartitions { it =>
-      new Iterator[Row] {
-        // current run's collected entries (non-null id/i only, capped)
-        private val ids = new Array[Long](cap)
-        private val pos = new Array[Long](cap)
-        private var n = 0
-        private var keyNull = false
-        private var key = 0L
-        private var open = false
-        private var emit: Iterator[Row] = Iterator.empty
-
-        /** Close the current run: emit its pairs iff 2 ≤ n ≤ maxPerGram
-          * (n == cap means the saturation guard fired — drop the group,
-          * the same skip-huge-cluster rule as the capped buffer). */
-        private def closeRun(): Unit = {
-          if (open && n >= 2 && n <= maxPerGram) {
-            // sort entries by (id, i); each unordered pair of DISTINCT
-            // entries emits once, oriented ascending — identical multiset
-            // to the old per-x strict-> filter expansion
-            val idx = (0 until n).sortBy(p => (ids(p), pos(p)))
-            val ia = idx.map(ids(_)).toArray
-            val pa = idx.map(pos(_)).toArray
-            val kNull = keyNull; val k = key
-            val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-            var a = 0
-            while (a < ia.length) {
-              var b = a + 1
-              while (b < ia.length) {
-                if (ia(a) != ia(b) || pa(a) != pa(b))
-                  rows += Row(ia(a), pa(a), ia(b), pa(b),
-                    if (kNull) null else k)
-                b += 1
-              }
-              a += 1
-            }
-            emit = rows.iterator
-          }
-          n = 0; open = false
+    val pairs = sorted.queryExecution.toRdd.mapPartitions { rows =>
+      val it = rows.buffered
+      val ids = new Array[Long](cap)
+      val pos = new Array[Long](cap)
+      Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+        val h = it.head.getLong(0)
+        var n = 0
+        while (it.hasNext && it.head.getLong(0) == h) {
+          val r = it.next()
+          if (n < cap) { ids(n) = r.getLong(1); pos(n) = r.getLong(2); n += 1 }
         }
-
-        private def advance(): Unit = {
-          while (!emit.hasNext && it.hasNext) {
-            val r = it.next()
-            val hNull = r.isNullAt(0)
-            val h = if (hNull) 0L else r.getLong(0)
-            if (!open || hNull != keyNull || (!hNull && h != key)) {
-              closeRun()
-              open = true; keyNull = hNull; key = h
-            }
-            // null id/pos entries ride the run but are never collected —
-            // mirrors the aggregate's null-skipping update()
-            if (!r.isNullAt(1) && !r.isNullAt(2) && n < cap) {
-              ids(n) = r.getLong(1); pos(n) = r.getLong(2); n += 1
-            } else if (!r.isNullAt(1) && !r.isNullAt(2)) {
-              // at cap: the run is saturated; entries past cap are dropped
-              // (which entries survive never matters — the run is dropped)
-            }
-          }
-          if (!emit.hasNext && !it.hasNext) closeRun()
-        }
-
-        override def hasNext: Boolean = {
-          if (!emit.hasNext) advance()
-          emit.hasNext
-        }
-        override def next(): Row = {
-          if (!hasNext) throw new NoSuchElementException
-          emit.next()
-        }
+        if (n > maxPerGram) Nil
+        else for (a <- 0 until n; b <- a + 1 until n)
+          yield Row(ids(a), pos(a), ids(b), pos(b))
       }
     }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("id_a", LongType), StructField("pos_a", LongType),
-      StructField("id_b", LongType), StructField("pos_b", LongType),
-      StructField("h", LongType))))
+    anchors.sparkSession.createDataFrame(pairs, StructType(
+      Seq("id_a", "pos_a", "id_b", "pos_b").map(StructField(_, LongType))))
   }
 }

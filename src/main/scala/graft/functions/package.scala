@@ -104,13 +104,14 @@ package object functions {
     * scan stage — the scale path for LSH banding (see
     * graft.plans.MinHashSignature for the algorithm and why densification
     * is required on short documents). */
-  /** Winnowed anchor positions + gram hashes (array<struct<i,h>>) for
-    * exact-substring dedup, selected in one native O(len) pass inside the
-    * scan stage (graft.plans.WinnowedAnchors). */
-  def winnowedAnchors(text: Column, minLen: Int, w: Int): Column =
+  /** Robust-winnowing anchors of the `gramLen`-grams of `text`
+    * (array<struct<i,h>>: 1-based position, xxhash64) over windows of `w`
+    * grams, for exact-substring dedup; one native pass inside the scan
+    * stage (graft.plans.WinnowedAnchors). */
+  def winnowedAnchors(text: Column, gramLen: Int, w: Int): Column =
     org.apache.spark.sql.graftbridge.column(
       graft.plans.WinnowedAnchors(
-        org.apache.spark.sql.graftbridge.expression(text), minLen, w))
+        org.apache.spark.sql.graftbridge.expression(text), gramLen, w))
 
   /** Per-vocabulary-term occurrence counts of a token array, one native
     * codegen'd pass with an O(1) probe per token (graft.plans
@@ -274,17 +275,6 @@ package object functions {
       graft.plans.PqAdc(
         org.apache.spark.sql.graftbridge.expression(codes),
         org.apache.spark.sql.graftbridge.expression(lut)))
-
-  /** collect_list(struct(id, pos)) with a HARD per-group cap (cap pairs;
-    * a group at the cap is saturated — filter `size BETWEEN 2 AND cap-1`
-    * to reproduce drop-over-populated-groups in ONE pass). See
-    * graft.plans.BoundedCollectPairsAgg. */
-  def boundedCollectPairs(id: Column, pos: Column, cap: Int): Column =
-    org.apache.spark.sql.graftbridge.column(
-      graft.plans.BoundedCollectPairsAgg(
-        org.apache.spark.sql.graftbridge.expression(id),
-        org.apache.spark.sql.graftbridge.expression(pos), cap)
-        .toAggregateExpression())
 
   /** Nearest-centroid index (int) of an array<double> vector against a
     * driver-held codebook — the IVF cell-routing kernel. Native codegen'd

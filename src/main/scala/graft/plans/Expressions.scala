@@ -466,29 +466,28 @@ object CharNgramHashes {
   }
 }
 
-/** Native winnowed anchor selection for exact-substring dedup (Schleimer
-  * et al., "Winnowing: Local Algorithms for Document Fingerprinting",
-  * SIGMOD 2003): positions whose `minLen`-gram xxhash64 is minimal in the
-  * `w`-gram window ending at that position (ties keep every minimal
-  * position — a superset of robust winnowing's rightmost-min, so the
-  * ≥ minLen+w−1 duplicated-span detection guarantee holds).
+/** Native robust winnowing for exact-substring dedup (Schleimer et al.,
+  * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
+  * 2003): hash every `gramLen`-gram with xxhash64 and keep every gram
+  * whose hash is a minimum (ties included) of some full window of `w`
+  * consecutive grams; a text with fewer than `w` grams is one window.
+  * Two copies of any run of `w` grams therefore share an anchor at the
+  * same offset, whatever text surrounds them. On random hashes about
+  * 2/(w+1) of the grams are anchors.
   *
-  * Exact drop-in for the declarative formulation in
-  * ExactSubstr.winnowedCandidates — `transform(sequence(…), i ->
-  * xxhash64(substr(t, i, minLen)))` + a per-position `array_min(slice(…))`
-  * — which costs O(len·minLen) interpreted lambda evaluations per
-  * document (observed: tens of minutes over a 10M-doc corpus). This
-  * expression does one O(len) byte walk: a sliding xxhash64 per position
-  * (zero-copy on ASCII) and a monotonic-deque window minimum, inside
-  * whole-stage codegen.
+  * One pass per document inside whole-stage codegen: a hash per gram
+  * (zero-copy on ASCII), then two monotonic-deque sweeps — the minimum
+  * of each window, and for each gram the largest such minimum over the
+  * windows that contain it. The declarative formulation it equals is
+  * pinned in ExactSubstrSpec.
   *
   * Returns array<struct<i: long, h: long>> of (1-based gram position,
-  * gram hash); empty when the string is shorter than `minLen`.
+  * gram hash); empty when the string is shorter than `gramLen`.
   */
-case class WinnowedAnchors(child: Expression, minLen: Int, w: Int)
+case class WinnowedAnchors(child: Expression, gramLen: Int, w: Int)
     extends UnaryExpression {
 
-  require(minLen > 0 && w > 0, "minLen and w must be positive")
+  require(gramLen > 0 && w > 0, "gramLen and w must be positive")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case _: StringType => TypeCheckResult.TypeCheckSuccess
@@ -503,10 +502,10 @@ case class WinnowedAnchors(child: Expression, minLen: Int, w: Int)
   override def prettyName: String = "winnowed_anchors"
 
   override def nullSafeEval(input: Any): Any =
-    WinnowedAnchors.compute(input.asInstanceOf[UTF8String], minLen, w)
+    WinnowedAnchors.compute(input.asInstanceOf[UTF8String], gramLen, w)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.WinnowedAnchors.compute($c, $minLen, $w)")
+    defineCodeGen(ctx, ev, c => s"graft.plans.WinnowedAnchors.compute($c, $gramLen, $w)")
 
   override protected def withNewChildInternal(newChild: Expression): WinnowedAnchors =
     copy(child = newChild)
@@ -517,18 +516,18 @@ object WinnowedAnchors {
   private val Empty = new GenericArrayData(Array.empty[Any])
 
   /** Called from generated code. */
-  def compute(s: UTF8String, minLen: Int, w: Int): ArrayData = {
+  def compute(s: UTF8String, gramLen: Int, w: Int): ArrayData = {
     val numChars = s.numChars()
-    if (numChars < minLen) return Empty
+    if (numChars < gramLen) return Empty
     val base = s.getBaseObject
     val offset = s.getBaseOffset
     val numBytes = s.numBytes()
-    val count = numChars - minLen + 1
+    val count = numChars - gramLen + 1
     val hashes = new Array[Long](count)
     if (numBytes == numChars) {
       var i = 0
       while (i < count) {
-        hashes(i) = XXH64.hashUnsafeBytes(base, offset + i, minLen, Seed)
+        hashes(i) = XXH64.hashUnsafeBytes(base, offset + i, gramLen, Seed)
         i += 1
       }
     } else {
@@ -544,23 +543,38 @@ object WinnowedAnchors {
       var i = 0
       while (i < count) {
         val from = charOffs(i)
-        val until = charOffs(i + minLen)
+        val until = charOffs(i + gramLen)
         hashes(i) = XXH64.hashUnsafeBytes(base, offset + from, until - from, Seed)
         i += 1
       }
     }
-    // monotonic deque of indices with non-decreasing hashes; equal values
-    // all stay so every tied minimum in a window is an anchor
+    // mins(j): minimum of window j (grams j until j + win)
+    val win = math.min(w, count)
+    val nw = count - win + 1
+    val mins = new Array[Long](nw)
     val dq = new Array[Int](count)
     var head = 0
     var tail = 0 // exclusive
-    val out = new java.util.ArrayList[Any](2 * count / w + 2)
     var i = 0
     while (i < count) {
-      while (tail > head && hashes(dq(tail - 1)) > hashes(i)) tail -= 1
+      while (tail > head && hashes(dq(tail - 1)) >= hashes(i)) tail -= 1
       dq(tail) = i; tail += 1
-      while (dq(head) < i - (w - 1)) head += 1
-      if (hashes(i) == hashes(dq(head)))
+      if (dq(head) <= i - win) head += 1
+      if (i >= win - 1) mins(i - win + 1) = hashes(dq(head))
+      i += 1
+    }
+    // gram i is a minimum of a window containing it iff its hash is at
+    // most the largest mins(j) over those windows, j in [i - win + 1, i]
+    val out = new java.util.ArrayList[Any](2 * count / (w + 1) + 2)
+    head = 0; tail = 0
+    i = 0
+    while (i < count) {
+      if (i < nw) {
+        while (tail > head && mins(dq(tail - 1)) <= mins(i)) tail -= 1
+        dq(tail) = i; tail += 1
+      }
+      if (dq(head) <= i - win) head += 1
+      if (hashes(i) <= mins(dq(head)))
         out.add(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any]((i + 1).toLong, hashes(i))))
       i += 1

@@ -1085,7 +1085,7 @@ object TrainingData extends QueryModule {
       |FROM documents WHERE doc_id % 20 <> 0 ORDER BY doc_id""".stripMargin
 
   // Streaming Deduplicate-with-TTL on the stateful substrate
-  // (transformWithState — streaming/Stateful.scala). StatefulV2Spec
+  // (transformWithState — streaming/Stateful.scala). StatefulSpec
   // plan-asserts the TransformWithState operator; this gate pins the
   // substrate against the batch-semantic DuckDB oracle through a real
   // file stream. doc_id folds down mod 500 so duplicate keys recur
@@ -1332,8 +1332,8 @@ object TrainingData extends QueryModule {
   // Exact duplicated-substring spans (Lee et al. 2022 ExactSubstr):
   // maximal runs of text covered by a ≥40-char substring occurring ≥2
   // times anywhere in the corpus. The oracle re-derives spans from raw
-  // grams (no hashing) — the Spark side's 128-bit fingerprints must
-  // reproduce it exactly.
+  // grams (no hashing); the Spark side is the winnowed scale path
+  // (anchor pairs checked by characters), which must reproduce it exactly.
   private def d107(s: SparkSession, dir: String): DataFrame =
     graft.dedup.ExactSubstr.duplicateSpans(
       Tables.documents(s, dir), "doc_id", "text", minLen = 40)

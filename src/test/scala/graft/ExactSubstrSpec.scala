@@ -59,160 +59,77 @@ class ExactSubstrSpec extends GraftSpec {
     assert(!out(0L).contains(shared) && !out(1L).contains(shared))
   }
 
-  test("winnowed anchors catch every duplicated span of length >= minLen + w - 1") {
-    // guarantee: dup length >= L + w - 1 = 40 + 10 - 1 = 49; the shared
-    // 45-char passage sits inside a 49+-char duplicated region (the
-    // surrounding ' || '/' .. ' differ, so pad the plant to be safe)
-    val longShared = shared + " iota kappa lambda" // 63 chars duplicated
-    val d2 = Seq(
-      (10L, s"head A $longShared tail A"),
-      (11L, s"other head B $longShared closing B"),
-      (12L, "no duplication in this document whatsoever truly original"))
-      .toDF("doc_id", "text")
-    val cand = ExactSubstr.winnowedCandidates(d2, "doc_id", "text", minLen = 40, w = 10)
-    val pairs = cand.select("id_a", "id_b").distinct()
-      .as[(Long, Long)].collect().toSet
-    assert(pairs.contains((10L, 11L)), s"guaranteed anchor match missed: $pairs")
-    assert(!pairs.exists { case (a, b) => a == 12L || b == 12L })
+  /** (1-based position, hash) of every anchor the native kernel keeps. */
+  private def anchors(t: String, gramLen: Int, w: Int): Seq[(Long, Long)] = {
+    val a = graft.plans.WinnowedAnchors.compute(
+      org.apache.spark.unsafe.types.UTF8String.fromString(t), gramLen, w)
+    (0 until a.numElements()).map { j =>
+      val r = a.getStruct(j, 2); (r.getLong(0), r.getLong(1)) }
   }
 
-  test("bucket pair expansion equals the self-join formulation (incl. cap and within-doc pairs)") {
-    // randomized docs with planted shared passages + within-doc repeats;
-    // the single-shuffle per-bucket expansion must emit exactly the pair
-    // set of the reference two-sided join at every (minLen, w, cap)
-    val rnd = new scala.util.Random(17)
-    def words(n: Int) = Seq.fill(n)(f"w${rnd.nextInt(40)}%02d").mkString(" ")
-    val passage = "the planted shared passage that recurs across documents verbatim"
-    val docs = (0L until 30L).map { i =>
-      val t = i % 3 match {
-        case 0 => s"${words(8)} $passage ${words(8)}"
-        case 1 => s"${words(5)} $passage ${words(3)} $passage ${words(4)}" // within-doc repeat
-        case _ => words(20)
-      }
-      (i, t)
-    }.toDF("doc_id", "text")
-    for ((minLen, w, cap) <- Seq((40, 10, 1000), (30, 5, 1000), (40, 10, 3))) {
-      val got = ExactSubstr.winnowedCandidates(docs, "doc_id", "text",
-        minLen, w, cap).select("id_a", "pos_a", "id_b", "pos_b", "h")
-        .as[(Long, Long, Long, Long, Long)].collect().toSet
-      // reference: the original two-sided join over capped buckets
-      val anchors = docs.select(col("doc_id").as("id"),
-          explode(graft.functions.winnowedAnchors(col("text"), minLen, w)).as("a"))
-        .select(col("id"), col("a.i").as("i"), col("a.h").as("h"))
-      val ok = anchors.groupBy("h").agg(count(lit(1)).as("n"))
-        .filter(col("n").between(2, cap)).select("h")
-      val kept = anchors.join(ok, Seq("h"), "left_semi")
-      val want = kept.select(col("h"), col("id").as("id_a"), col("i").as("pos_a"))
-        .join(kept.select(col("h"), col("id").as("id_b"), col("i").as("pos_b")), Seq("h"))
-        .filter(col("id_a") < col("id_b") ||
-          (col("id_a") === col("id_b") && col("pos_a") < col("pos_b")))
-        .select("id_a", "pos_a", "id_b", "pos_b", "h")
-        .as[(Long, Long, Long, Long, Long)].collect().toSet
-      assert(got == want, s"minLen=$minLen w=$w cap=$cap: " +
-        s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
-      assert(got.nonEmpty, s"degenerate test at minLen=$minLen w=$w cap=$cap")
-      // the scratch-disk pass split partitions the result by gram: the
-      // union of the passes IS the single-pass pair set, each pass is a
-      // strict subset, and the passes are disjoint
-      val parts = (0 until 3).map { p =>
-        ExactSubstr.winnowedCandidates(docs, "doc_id", "text", minLen, w,
-          cap, hashSplit = 3, hashPart = p)
-          .select("id_a", "pos_a", "id_b", "pos_b", "h")
-          .as[(Long, Long, Long, Long, Long)].collect().toSet
-      }
-      assert(parts.reduce(_ ++ _) == want,
-        s"3-pass union != single pass at minLen=$minLen w=$w cap=$cap")
-      assert(parts.forall(_.size < want.size), "a pass unexpectedly saw every gram")
-      assert(parts.combinations(2).forall { case Seq(a, b) => (a & b).isEmpty },
-        "passes overlap")
+  test("anchor rule: a run of w grams shares an anchor behind 24 random prefixes") {
+    // robust winnowing: the run's one full window holds its minimum gram
+    // at the same offset in both copies. A rule that keeps only the
+    // minimum of the window ENDING at a gram lets the differing prefix
+    // grams hide that minimum in one copy.
+    val (gramLen, w) = (31, 10)
+    val rnd = new scala.util.Random(20261021L)
+    def noise(n: Int) = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
+    for (trial <- 0 until 24) {
+      val run = noise(gramLen + w - 1)
+      val (p1, p2) = (noise(5 + rnd.nextInt(40)) + "<", noise(5 + rnd.nextInt(40)) + "[")
+      val (t1, t2) = (p1 + run + ">" + noise(20), p2 + run + "]" + noise(20))
+      val (a1, a2) = (anchors(t1, gramLen, w).toSet, anchors(t2, gramLen, w).toSet)
+      val common = (0 until w).filter(k =>
+        a1.exists(_._1 == p1.length + 1 + k) && a2.exists(_._1 == p2.length + 1 + k))
+      assert(common.nonEmpty, s"trial $trial: no common anchor in\n$t1\n$t2")
     }
   }
 
-  test("sorted-run walk equals the bounded-collect aggregate on adversarial anchors") {
-    // direct pin of walkSortedAnchors (the r11 one-sort grouping) against
-    // the bounded_collect_pairs aggregate it replaced, on anchor shapes the
-    // winnow kernel itself can never produce: duplicate (id, i) entries
-    // (must never self-pair, but each copy pairs with the others), null
-    // ids (ride the run, never collected), and runs at exactly cap-1, cap
-    // and cap+1 entries (the saturation boundary)
-    val cap = 4
-    val anchors = Seq[(Option[Long], Long, Long)](
-      (Some(1L), 10L, 100L), (Some(2L), 20L, 100L),            // size 2
-      (Some(3L), 30L, 200L), (Some(3L), 30L, 200L),
-      (Some(4L), 40L, 200L),                                   // dup entry
-      (None, 1L, 300L), (Some(5L), 50L, 300L), (Some(6L), 60L, 300L), // null id
-      (Some(7L), 1L, 400L), (Some(7L), 2L, 400L), (Some(7L), 3L, 400L),
-      (Some(7L), 4L, 400L),                                    // == cap
-      (Some(8L), 1L, 500L), (Some(8L), 2L, 500L), (Some(8L), 3L, 500L), // == cap-1
-      (Some(9L), 1L, 600L), (Some(9L), 2L, 600L), (Some(9L), 3L, 600L),
-      (Some(9L), 4L, 600L), (Some(9L), 5L, 600L),              // cap+1
-      (Some(10L), 70L, 700L))                                  // singleton
-      .toDF("id", "i", "h")
-    def norm(df: org.apache.spark.sql.DataFrame) = df
-      .select("id_a", "pos_a", "id_b", "pos_b", "h")
-      .as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq
-    val walk = norm(ExactSubstr.walkSortedAnchors(anchors, cap - 1))
-    val agg = norm(anchors
-      .groupBy("h").agg(graft.functions.boundedCollectPairs(
-        col("id"), col("i"), cap).as("xs"))
-      .filter(size(col("xs")).between(2, cap - 1))
-      .select(col("h"), explode(flatten(transform(col("xs"), x =>
-        transform(
-          filter(col("xs"), y => y.getField("id") > x.getField("id") ||
-            (y.getField("id") === x.getField("id") &&
-             y.getField("i") > x.getField("i"))),
-          y => struct(
-            x.getField("id").as("id_a"), x.getField("i").as("pos_a"),
-            y.getField("id").as("id_b"), y.getField("i").as("pos_b")))))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.pos_a").as("pos_a"),
-        col("p.id_b").as("id_b"), col("p.pos_b").as("pos_b"), col("h")))
-    assert(walk == agg, s"walk=${walk.take(5)}... agg=${agg.take(5)}...")
-    // spot invariants: the dup entry never self-pairs but pairs twice with
-    // its neighbor; the null-id run pairs only its two non-null entries;
-    // the cap and cap+1 runs are dropped, cap-1 survives complete
-    assert(walk.count(p => p._5 == 200L) == 2)
-    assert(!walk.exists(p => p._5 == 200L && p._1 == p._3 && p._2 == p._4))
-    assert(walk.count(p => p._5 == 300L) == 1)
-    assert(!walk.exists(p => p._5 == 400L || p._5 == 600L || p._5 == 700L))
-    assert(walk.count(p => p._5 == 500L) == 3)
-  }
-
   test("native winnowed anchors equal the declarative formulation") {
-    // the interpreted reference: per-position xxhash64 of the minLen-gram
-    // + array_min over the w-window ending at each position — the exact
-    // formulation the native WinnowedAnchors expression replaced
+    // the interpreted reference: per-position xxhash64 of the gram, the
+    // minimum of every full window of w grams (one window when a text
+    // has fewer), and a gram is an anchor iff it equals the minimum of
+    // some window that contains it
     import org.apache.spark.sql.functions._
-    val minLen = 8
+    val gramLen = 8
     val w = 4
     val docs = Seq(
       "abcdefghijklmnopqrstuvwxyz abcdefghijklmnop",
       "aaaaaaaaaaaaaaaaaaaa",            // all-equal hashes: every tie kept
-      "short",                           // < minLen: no anchors
-      "exactly8",                        // == minLen: one gram
+      "short",                           // < gramLen: no anchors
+      "exactly8",                        // == gramLen: one gram
       "café au lait crème brûlée et café au lait", // multibyte
-      "")
+      "",
+      "nine char")                       // 2 grams < w: one window
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
-    val hs = when(length(col("t")) >= minLen,
-      transform(sequence(lit(1), length(col("t")) - (minLen - 1)),
-        i => xxhash64(col("t").substr(i, lit(minLen)))))
+    val hs = when(length(col("t")) >= gramLen,
+      transform(sequence(lit(1), length(col("t")) - (gramLen - 1)),
+        i => xxhash64(col("t").substr(i, lit(gramLen)))))
       .otherwise(array().cast("array<bigint>"))
+    val n = size(col("__hs"))
+    val win = least(n, lit(w))
+    val nw = n - win + 1
     val reference = docs.withColumn("__hs", hs)
-      .filter(size(col("__hs")) > 0)
+      .filter(n > 0)
+      .withColumn("__mins", transform(sequence(lit(1), nw),
+        j => array_min(slice(col("__hs"), j, win))))
       .select(col("id"), explode(filter(
-        transform(sequence(lit(1), size(col("__hs"))), i =>
+        transform(sequence(lit(1), n), i =>
           struct(i.cast("long").as("i"), element_at(col("__hs"), i).as("h"),
-            array_min(slice(col("__hs"), greatest(lit(1), i - (w - 1)),
-              i - greatest(lit(1), i - (w - 1)) + 1)).as("m"))),
-        s => s.getField("h") === s.getField("m"))).as("a"))
+            exists(sequence(greatest(lit(1), i - win + 1), least(i, nw)),
+              j => element_at(col("__mins"), j) === element_at(col("__hs"), i)).as("m"))),
+        s => s.getField("m"))).as("a"))
       .select(col("id"), col("a.i"), col("a.h"))
       .as[(Long, Long, Long)].collect().toSet
     val native = docs.select(col("id"),
-        explode(graft.functions.winnowedAnchors(col("t"), minLen, w)).as("a"))
+        explode(graft.functions.winnowedAnchors(col("t"), gramLen, w)).as("a"))
       .select(col("id"), col("a.i"), col("a.h"))
       .as[(Long, Long, Long)].collect().toSet
     assert(native == reference)
-    assert(native.nonEmpty && native.exists(_._1 == 1L)) // ties all kept
+    assert(native.count(_._1 == 1L) == 13) // ties all kept
     assert(!native.exists(r => r._1 == 2L || r._1 == 5L)) // short/empty
+    assert(native.count(_._1 == 3L) == 1 && native.exists(_._1 == 6L))
   }
 
   test("ivf-pq with exact rerank matches brute force on clustered vectors") {

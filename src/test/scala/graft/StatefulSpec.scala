@@ -11,14 +11,11 @@ import graft.streaming.Stateful
   * native timers): Deduplicate TTL at its boundary, the count triggers,
   * the processing-time timers, GroupIntoBatches on a ListState cell,
   * OrderedListState, and two independent event-time timers on one key
-  * (reference DoFn.java:475–540 TimerMap). Test names that still say
-  * "V1"/"V2" date from when a second substrate
-  * (`flatMapGroupsWithState`) ran the same logic values; the expected
-  * values they pin are unchanged.
+  * (reference DoFn.java:475–540 TimerMap).
   *
   * transformWithState ships on RocksDB only, so every query runs inside
   * `Stateful.withRocksDB`. */
-class StatefulV2Spec extends GraftSpec {
+class StatefulSpec extends GraftSpec {
   import spark.implicits._
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -54,7 +51,7 @@ class StatefulV2Spec extends GraftSpec {
     }
   }
 
-  test("deduplicate: V1 and V2 emit identical values on identical scripted input") {
+  test("deduplicate: emits the first value per key on scripted input") {
     Stateful.withRocksDB(spark) {
       implicit val ctx = spark.sqlContext
       val in2 = MemoryStream[(String, Int)]
@@ -80,7 +77,7 @@ class StatefulV2Spec extends GraftSpec {
   }
 
   test("deduplicate TTL boundary: an element arriving after its key's " +
-      "deadline re-emits on both substrates") {
+      "deadline re-emits") {
     // an element landing after its key's TTL expiry (but in a
     // data-carrying batch) must re-emit — whether the TTL cleared via a
     // fired timer between batches or via the head-of-bundle drain, the
@@ -131,7 +128,7 @@ class StatefulV2Spec extends GraftSpec {
     } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
   }
 
-  test("count-triggered panes: V1 and V2 produce identical pane sequences") {
+  test("count-triggered panes: the pane sequence carries running sums across batches") {
     Stateful.withRocksDB(spark) {
       implicit val ctx = spark.sqlContext
       val in2 = MemoryStream[(String, Int)]
@@ -151,7 +148,7 @@ class StatefulV2Spec extends GraftSpec {
     }
   }
 
-  test("orFinally: V2 repeats count panes then closes the key, identically to V1") {
+  test("orFinally: repeats count panes then closes the key") {
     Stateful.withRocksDB(spark) {
       implicit val ctx = spark.sqlContext
       val input = MemoryStream[(String, Int)]
@@ -174,7 +171,7 @@ class StatefulV2Spec extends GraftSpec {
     }
   }
 
-  test("afterEach: V2 sequenced sub-triggers fire in order then finish, identically to V1") {
+  test("afterEach: sequenced sub-triggers fire in order then finish") {
     Stateful.withRocksDB(spark) {
       implicit val ctx = spark.sqlContext
       val input = MemoryStream[(String, Int)]
@@ -213,7 +210,7 @@ class StatefulV2Spec extends GraftSpec {
     }
   }
 
-  test("AfterFirst: V2 count side fires immediately, clock side flushes a short pane") {
+  test("AfterFirst: count side fires immediately, clock side flushes a short pane") {
     Stateful.withRocksDB(spark) {
       implicit val ctx = spark.sqlContext
       val input = MemoryStream[(String, Int)]
